@@ -28,6 +28,23 @@ from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
 
+# Runs profile_query.py against TREE: the engine modules are imported
+# from TREE before the script runs, so the script's own
+# ``sys.path.insert(0, <its repo root>)`` cannot swap in another tree's
+# via_spark; the pass fails unless they really come from TREE.
+_PASS = """
+import runpy, sys
+from pathlib import Path
+tree, script = Path(sys.argv[1]).resolve(), sys.argv[2]
+sys.path.insert(0, str(tree))
+import __spark_entry__, via_spark
+for mod in (__spark_entry__, via_spark):
+    if tree not in Path(mod.__file__).resolve().parents:
+        sys.exit(f"{mod.__name__} imported from {mod.__file__}, not under {tree}")
+sys.argv = [script, *sys.argv[3:]]
+runpy.run_path(script, run_name="__main__")
+"""
+
 
 def run_pass(
     tree: str, queries: str, reps: int, sf_dir: str, extra_env: dict | None = None
@@ -35,12 +52,14 @@ def run_pass(
     """One isolated profile pass in ``tree``; returns {query: median_sec}."""
     script = Path(tree) / "scripts" / "profile_query.py"
     if not script.exists():
-        # old trees predate the harness — use the current copy, but run
-        # it against the old tree's code via cwd + sys.path injection
+        # old trees predate the harness — use the current copy
         script = _REPO / "scripts" / "profile_query.py"
     proc = subprocess.run(
         [
             sys.executable,
+            "-c",
+            _PASS,
+            tree,
             str(script),
             "--queries",
             queries,
@@ -61,11 +80,14 @@ def run_pass(
     )
     line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "{}"
     try:
-        return json.loads(line)["queries"]
+        got = json.loads(line)["queries"] if proc.returncode == 0 else None
     except (json.JSONDecodeError, KeyError):
+        got = None
+    if got is None:
         print(proc.stdout[-2000:], file=sys.stderr)
         print(proc.stderr[-2000:], file=sys.stderr)
         raise RuntimeError(f"profile pass failed in {tree}")
+    return got
 
 
 def main() -> int:

@@ -161,6 +161,40 @@ def test_forensic_search_honors_suppression(engine):
     assert engine.tier2_clusters(text_filter="quantum", now=later + 1).count() >= 1
 
 
+def test_no_rules_store_reads_like_inert_rules(spark, tmp_path):
+    """tier2 reads skip the rules anti-join when no rules store exists;
+    the answers equal those under a store whose every rule is expired or
+    inactive, and an active suppression still filters."""
+    import os
+
+    eng = VIAEngine(spark, str(tmp_path / "rules_store"))
+    eng.ingest_stream(_workload())
+    out = eng.tier1_rhythm_anomalies(window_sec=WINDOW, now=NOW)
+    hashes = [a["rhythm_hash"] for a in out["novel_anomalies"] + out["frequency_anomalies"]]
+    assert len(hashes) == 2
+
+    def reads(now):
+        clusters = eng.tier2_clusters(text_filter=None, now=now).collect()
+        pos = [clusters[0]["cluster_id"]]
+        return (sorted(map(tuple, clusters)),
+                sorted(map(tuple, eng.tier2_triage(pos, now=now).collect())))
+
+    assert not os.path.exists(eng.rules_path)
+    bare = {now: reads(now) for now in (None, NOW)}
+    assert len(bare[NOW][0]) == 2 and bare[NOW][1]
+
+    eng.control_suppress(hashes[0], ttl_sec=1, now=0)  # expired long ago
+    eng.control_patch(hashes[1], now=NOW)
+    eng.control_delete_patch(hashes[1])  # inactive
+    assert os.path.exists(eng.rules_path) and eng.control_rules(now=NOW) == []
+    assert {now: reads(now) for now in (None, NOW)} == bare
+
+    eng.control_suppress(hashes[0], ttl_sec=600, now=NOW)
+    clusters = eng.tier2_clusters(text_filter=None, now=NOW).collect()
+    assert [c["cluster_id"] for c in clusters] == [hashes[1]]
+    assert eng.tier2_triage([hashes[1]], now=NOW).count() == 0
+
+
 def test_schema_endpoints(engine):
     import json
 

@@ -245,6 +245,74 @@ def test_detection_rereads_rules_per_trigger(spark, sf_smoke, tmp_path):
     assert second == first - {target}
 
 
+def _tier2_rows(spark, path):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in promote.read_tier2(spark, path).collect()
+    )
+
+
+def test_stream_and_api_promote_identical_tier2(spark, sf_smoke, tmp_path):
+    """One detect→promote step serves both callers: over the same tier1
+    store, a detection trigger and the API verb at that store's newest
+    ts write the same tier2 rows, each exactly once."""
+    import os
+
+    from via_spark.api import VIAEngine
+
+    src, tier1_path = _ingest(spark, sf_smoke, tmp_path)  # <tmp>/tier1
+    tier2_stream = str(tmp_path / "tier2_stream")
+    q = pipeline.start_detection(
+        spark, pipeline.read_otel_stream(spark, src), tier1_path, tier2_stream,
+        str(tmp_path / "ckpt_detect"), window_sec=rhythm.DEFAULT_WINDOW_SEC,
+        available_now=True, **DETECT_VARIANT,
+    )
+    q.awaitTermination(180)
+
+    eng = VIAEngine(spark, str(tmp_path))
+    assert eng.tier1_path == tier1_path and not os.path.exists(eng.tier2_path)
+    now = spark.read.parquet(tier1_path).agg(F.max("ts")).collect()[0][0]
+    out = eng.tier1_rhythm_anomalies(
+        window_sec=rhythm.DEFAULT_WINDOW_SEC, now=now, **DETECT_VARIANT
+    )
+
+    streamed = _tier2_rows(spark, tier2_stream)
+    assert streamed, "the fixture window must hold anomalies"
+    assert _tier2_rows(spark, eng.tier2_path) == streamed
+    # one tier2 row per returned anomaly: written once, not per re-run
+    flagged = out["novel_anomalies"] + out["frequency_anomalies"]
+    assert sorted(a["rhythm_hash"] for a in flagged) == sorted(
+        r[1] for r in streamed
+    )
+
+
+def test_anomaly_free_trigger_leaves_no_tier2_dir(spark, sf_smoke, tmp_path):
+    """No anomaly in the window → no tier2 write at all. A ``_SUCCESS``-
+    only directory would break ``read_tier2`` schema inference."""
+    import os
+
+    from via_spark.api import VIAEngine
+
+    src, tier1_path = _ingest(spark, sf_smoke, tmp_path)
+    quiet = dict(sample_size=200, novelty_min_count=10**9,
+                 frequency_min_count=10**9)
+    tier2 = str(tmp_path / "tier2_stream")
+    q = pipeline.start_detection(
+        spark, pipeline.read_otel_stream(spark, src), tier1_path, tier2,
+        str(tmp_path / "ckpt_detect"), window_sec=rhythm.DEFAULT_WINDOW_SEC,
+        available_now=True, **quiet,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert q.recentProgress, "the trigger must have run"
+    assert not os.path.exists(tier2)
+
+    eng = VIAEngine(spark, str(tmp_path))
+    out = eng.tier1_rhythm_anomalies(window_sec=rhythm.DEFAULT_WINDOW_SEC, **quiet)
+    assert out == {"novel_anomalies": [], "frequency_anomalies": []}
+    assert not os.path.exists(eng.tier2_path)
+
+
 def test_streaming_dedup_collapses_redelivery(spark, sf_smoke, tmp_path):
     """dropDuplicatesWithinWatermark: writing the SAME fixture twice
     into the source simulates at-least-once redelivery; the deduped

@@ -747,3 +747,24 @@ def test_simhash_arrow_bit_identical_to_native(spark, sf_oracle):
         simhash_hex_arrow(F.col("toks")).alias("arrow"),
     ).collect()
     assert all(r["native"] == r["arrow"] for r in got), got
+
+
+def test_simhash_arrow_memo_is_bounded(spark, monkeypatch):
+    """The Arrow kernel's per-worker token→hash memo is cleared once it
+    exceeds SIMHASH_MEMO_MAX at a batch start, without changing output."""
+    import pandas as pd
+
+    from via_spark.functions import simhash
+
+    simhash.simhash_hex_arrow(F.col("toks"))  # builds the kernel
+    kernel = simhash._SIMHASH_PD.func
+    memo = next(
+        c.cell_contents for c in kernel.__closure__
+        if isinstance(c.cell_contents, dict)
+    )
+    batch = pd.Series([[f"t{i}", f"u{i}", "shared"] for i in range(50)])
+    want = kernel(batch).tolist()
+    monkeypatch.setattr(simhash, "SIMHASH_MEMO_MAX", 10)
+    assert len(memo) > 10
+    assert kernel(batch).tolist() == want  # cleared, then refilled
+    assert len(memo) == 101  # one batch's distinct tokens, not the history

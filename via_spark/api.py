@@ -106,30 +106,15 @@ class VIAEngine:
         t1 = self._tier1()
         if now is None:
             now = t1.agg(F.max("ts")).collect()[0][0]
-        if now is None:  # empty store → nothing to analyze
-            return {"novel_anomalies": [], "frequency_anomalies": []}
-        out, anomalies = self._detect(t1, window_sec, now, **detect_kwargs)
-        if out:
-            # the anomaly rows are already on the driver — rebuild the
-            # (tiny) frame from them instead of re-running detection
-            # inside the rollup plan
-            anomalies = self.spark.createDataFrame(out, anomalies.schema)
-            recent = rhythm.recent_window(t1, now, window_sec)
-            clusters = promote.rollup_clusters(anomalies, recent)
-            promote.write_tier2(clusters, self.tier2_path)
+        rows = promote.detect_and_promote(
+            self.spark, t1, now, window_sec, self.tier2_path,
+            rules=self._active_rules(now), **detect_kwargs,
+        )
+        out = [r.asDict() for r in rows]
         return {
             "novel_anomalies": [a for a in out if a["anomaly_type"] == "novelty"],
             "frequency_anomalies": [a for a in out if a["anomaly_type"] == "frequency"],
         }
-
-    def _detect(self, t1: DataFrame, window_sec: int, now: int,
-                **detect_kwargs) -> tuple[list[dict], DataFrame]:
-        rules = control.active_rules(self._rules(), now)
-        anomalies = rhythm.find_rhythm_anomalies(
-            self.spark, sf_dir="", tier1=t1, now=now, window_sec=window_sec,
-            rules=rules, **detect_kwargs,
-        )
-        return [r.asDict() for r in anomalies.collect()], anomalies
 
     def run_evals(self, window_sec: int = 300, now: int | None = None,
                   **detect_kwargs) -> list[dict]:
@@ -145,11 +130,13 @@ class VIAEngine:
         t1 = self._tier1()
         if now is None:
             now = t1.agg(F.max("ts")).collect()[0][0]
-        if now is None:  # empty store → no detections, cases still judged
-            out = []
-        else:
-            out, _ = self._detect(t1, window_sec, now, **detect_kwargs)
-        flagged = {a["rhythm_hash"] for a in out}
+        flagged = set()
+        if now is not None:  # empty store → no detections, cases still judged
+            anomalies = rhythm.find_rhythm_anomalies(
+                self.spark, sf_dir="", tier1=t1, now=now, window_sec=window_sec,
+                rules=self._active_rules(now), **detect_kwargs,
+            )
+            flagged = {r["rhythm_hash"] for r in anomalies.collect()}
         results = []
         for path in sorted(glob.glob(os.path.join(self.evals_dir, "*.yml"))):
             case = control.read_eval_case(path)
@@ -275,10 +262,20 @@ class VIAEngine:
             return control.empty_rules(self.spark)
         return self.spark.read.parquet(self.rules_path)
 
+    def _active_rules(self, now: int | None) -> DataFrame | None:
+        """Rules in force at ``now``; None when no rule was ever written,
+        so detection plans no anti-join against an empty table."""
+        if not os.path.exists(self.rules_path):
+            return None
+        return control.active_rules(self.spark.read.parquet(self.rules_path), now)
+
     def _without_ruled(self, clusters: DataFrame, now: int | None) -> DataFrame:
         """Drop clusters whose hash has an active suppress/patch rule.
         ``now`` defaults to the newest stored cluster end (data-derived,
-        never wall clock — SURVEY.md §7.4 decision 2)."""
+        never wall clock — SURVEY.md §7.4 decision 2). No rules store →
+        nothing can be ruled out: no ``max(end_ts)`` job, no anti-join."""
+        if not os.path.exists(self.rules_path):
+            return clusters
         if now is None:
             now = clusters.agg(F.max("end_ts")).collect()[0][0] or 0
         return control.apply_rules(clusters, self._rules(), now)

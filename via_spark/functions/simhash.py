@@ -131,6 +131,8 @@ def simhash_hex_sql(tokens_col: str) -> Column:
 
 
 _SIMHASH_PD = None
+# token→hash memo cap per Python worker (~70 MB of str/int entries)
+SIMHASH_MEMO_MAX = 1 << 19
 
 
 def simhash_hex_arrow(tokens_col: Column) -> Column:
@@ -162,7 +164,10 @@ def simhash_hex_arrow(tokens_col: Column) -> Column:
     fingerprint path filters ``size(toks) > 0`` upstream; empty arrays
     render the all-ones fingerprint exactly like the native form).
     A per-worker token→hash memo amortizes sha256 across the corpus's
-    repeated vocabulary (worker reuse keeps it across tasks).
+    repeated vocabulary (worker reuse keeps it across tasks). It is
+    cleared whenever it holds more than ``SIMHASH_MEMO_MAX`` tokens at
+    the start of a batch, so a worker holds at most that many plus one
+    batch's distinct tokens.
     """
     global _SIMHASH_PD
     if _SIMHASH_PD is None:
@@ -182,6 +187,8 @@ def simhash_hex_arrow(tokens_col: Column) -> Column:
 
         @F.pandas_udf("string")
         def _simhash(toks: pd.Series) -> pd.Series:
+            if len(memo) > SIMHASH_MEMO_MAX:
+                memo.clear()
             one = np.uint64(1)
             out = []
             for tl in toks:

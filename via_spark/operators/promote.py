@@ -34,7 +34,7 @@ query prunes to the queried days; ``sample_logs`` caps payload width at
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from via_spark.operators import rhythm
@@ -218,6 +218,39 @@ def daily_rollup(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
             "event_date",
         )
     )
+
+
+def detect_and_promote(
+    spark: SparkSession,
+    tier1: DataFrame,
+    now: int | None,
+    window_sec: int,
+    tier2_path: str,
+    rules: DataFrame | None = None,
+    **detect_kwargs,
+) -> list[Row]:
+    """T7 in one step: detect over ``tier1`` at ``now``, append the
+    anomalous hashes' recent-window rollup to tier2, return the anomaly
+    rows. Shared by the streaming trigger and the API verb.
+
+    ``now is None`` (an empty store) is nothing to do. Otherwise the
+    detection plan runs ONCE: ``localCheckpoint`` keeps its few rows in
+    executor storage, the driver collects them from there, and the
+    rollup joins against the checkpoint instead of re-running detection.
+    No anomaly → no write, so tier2 never gets a ``_SUCCESS``-only
+    directory that :func:`read_tier2` cannot infer a schema from.
+    """
+    if now is None:
+        return []
+    anomalies = rhythm.find_rhythm_anomalies(
+        spark, sf_dir="", tier1=tier1, now=now, window_sec=window_sec,
+        rules=rules, **detect_kwargs,
+    ).localCheckpoint()
+    rows = anomalies.collect()
+    if rows:
+        recent = rhythm.recent_window(tier1, now, window_sec)
+        write_tier2(rollup_clusters(anomalies, recent), tier2_path)
+    return rows
 
 
 def write_tier2(clusters: DataFrame, path: str, mode: str = "append") -> None:

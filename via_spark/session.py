@@ -238,24 +238,18 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     n = target or spark.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        max_split = _size_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-        if size >= n * max_split:
-            return df  # ≥ n splits on bytes alone — already parallel
-        open_cost = _size_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-        )
-        charged = size + open_cost * max(len(df.inputFiles()), 1)
-        split = min(max_split, max(open_cost, charged // max(n, 1)))
-        est_parts = max(1, -(-charged // max(split, 1)))
-    except Exception:
-        # conservative fallback: the legacy RDD-partition gate
-        if df.rdd.getNumPartitions() < n:
-            return df.repartition(n)
-        return df
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    max_split = _size_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    )
+    if size >= n * max_split:
+        return df  # ≥ n splits on bytes alone — already parallel
+    open_cost = _size_bytes(
+        spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
+    )
+    charged = size + open_cost * max(len(df.inputFiles()), 1)
+    split = min(max_split, max(open_cost, charged // max(n, 1)))
+    est_parts = max(1, -(-charged // max(split, 1)))
     if est_parts < n:
         return df.repartition(n)
     return df

@@ -26,8 +26,11 @@ rows — SURVEY.md §7.4 decision 2 carried into streaming.
 Scale posture (100 TB/day): ingest is an append-only partitioned
 parquet sink (no shuffle); the windowed aggregation is the only stateful
 operator and its state is bounded by the watermark horizon × distinct
-hashes; detection cost per trigger is O(window + 10k baseline sample)
-regardless of store size (the reference's O10 posture). Swap the file
+hashes. Detection is NOT independent of store size: each trigger scans
+all of tier1 once for ``now = max(ts)`` and once more for the baseline
+top-k (the newest ``sample_size`` rows before the window, 10k by
+default; a partition-local top-k with no global sort), and the window
+itself once for detection and once for the rollup. Swap the file
 source for Kafka by changing ``read_otel_stream`` only.
 """
 
@@ -37,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from via_spark.functions.text import rhythm_hash, template
-from via_spark.operators import promote, rhythm
+from via_spark.operators import promote
 from via_spark.operators.schema_infer import otel_flatten
 
 INGEST_TRIGGER = "0.5 seconds"   # T1
@@ -226,6 +229,22 @@ def start_detection(
     ``batch_timings``, when provided, collects one dict per trigger
     (batch_id, fire wall-clock, compute seconds) — the trigger-phase vs
     compute split the soak budget is measured from.
+
+    Spark work per trigger, in order:
+
+    1. the T8 tee append, when ``tee_path`` is set;
+    2. a listing of the tier1 files (``_store_has_data``; no job) — a
+       store with no committed data ends the trigger here;
+    3. tier1 schema inference (parquet footer read);
+    4. ``now = max(ts)`` over all of tier1 — ``None`` (no rows) ends
+       the trigger with nothing written;
+    5. the rules table read, when ``rules_path`` exists;
+    6. the detection plan (window counts, baseline top-k over the
+       pre-window history, stats, joins), run once into a
+       ``localCheckpoint``, then its few rows collected from there;
+    7. only when there are anomalies: the rollup of the recent window
+       against the checkpointed anomalies and ONE tier2 append
+       (``promote.detect_and_promote``).
     """
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -244,22 +263,16 @@ def start_detection(
         if not _store_has_data(spark, tier1_path):
             return  # ingest has not committed any files yet
         tier1 = spark.read.parquet(tier1_path)
-        if not tier1.take(1):
-            return
         now = tier1.agg(F.max("ts")).collect()[0][0]
         rules = None
         if rules_path is not None and _store_exists(spark, rules_path):
             from via_spark.operators import control
 
             rules = control.active_rules(spark.read.parquet(rules_path), now)
-        anomalies = rhythm.find_rhythm_anomalies(
-            spark, sf_dir="", tier1=tier1, now=now, window_sec=window_sec,
-            rules=rules, **detect_kwargs
+        promote.detect_and_promote(
+            spark, tier1, now, window_sec, tier2_path, rules=rules,
+            **detect_kwargs,
         )
-        recent = rhythm.recent_window(tier1, now, window_sec)
-        clusters = promote.rollup_clusters(anomalies, recent)
-        if clusters.take(1):
-            promote.write_tier2(clusters, tier2_path)
         if batch_timings is not None:
             batch_timings.append(
                 {
