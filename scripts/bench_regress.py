@@ -7,8 +7,8 @@ runs). The only comparison that gates is: per-query MEDIANS taken
 within one JVM each, compared against a noise floor derived from the
 within-JVM sample spread of both runs.
 
-    python scripts/bench_regress.py BENCH_FULL_MEDIAN3_r7.json \
-        BENCH_FULL_MEDIAN5_r8.json [--ratio 2.0]
+    python scripts/bench_regress.py history/BENCH_FULL_MEDIAN3_r7.json \
+        history/BENCH_FULL_MEDIAN5_r8.json [--ratio 2.0]
 
 A query regresses iff BOTH hold:
   * new_median > ratio * old_median, and

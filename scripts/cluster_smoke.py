@@ -94,20 +94,7 @@ def main() -> int:
     ap.add_argument("--mem-per-worker", default="4g")
     ap.add_argument("--full", action="store_true",
                     help="run the whole queries() registry with oracle hash parity")
-    ap.add_argument("--staged", action="store_true",
-                    help="run the via_spark.staging registry (r10 staged "
-                         "queries) with oracle hash parity instead")
     args = ap.parse_args()
-    if args.full and args.staged:
-        ap.error("--full and --staged are mutually exclusive (--staged "
-                 "replaces the registered surface, it does not add to it)")
-    if args.staged:
-        from via_spark import staging
-
-        if not staging.staged_queries():
-            print("staging registry is empty (post-splice) — a 0/0 smoke "
-                  "proves nothing; run without --staged", file=sys.stderr)
-            return 2
 
     procs: list[subprocess.Popen] = []
     result: dict = {"ok": False, "master": f"spark://127.0.0.1:{MASTER_PORT}"}
@@ -147,15 +134,10 @@ def main() -> int:
         try:
             import __spark_entry__ as em
 
-            if args.staged:
-                from via_spark import staging
-
-                qs = staging.staged_queries()
-            else:
-                qs = em.queries()
+            qs = em.queries()
             counts: dict[str, int] = {}
             mismatched: list[str] = []
-            if args.full or args.staged:
+            if args.full:
                 import hashlib
 
                 import duckdb
@@ -175,12 +157,7 @@ def main() -> int:
                     )
                     return hashlib.sha256("\n".join(canon).encode()).hexdigest()
 
-                if args.staged:
-                    from via_spark import staging
-
-                    osql = staging.staged_oracle_sql()
-                else:
-                    osql = em.oracle_sql()
+                osql = em.oracle_sql()
                 for name in qs:
                     df = qs[name](spark, args.sf_dir)
                     rows = [tuple(r) for r in df.collect()]

@@ -69,28 +69,6 @@ PROBES = [
     "greedy_pack_stats",        # grouped-Arrow packing
 ]
 
-# staged family representatives — resolved from via_spark.staging
-# until the next splice lands; --staged runs these instead (the r9
-# staged set graduated to the registered surface in the r10 splice and
-# is covered by the main PROBES/driver rows now)
-STAGED_PROBES = [
-    "simhash_graph_triangles",       # degree-ordered wedge joins
-    "winnowing_fingerprint_stats",   # gram explode + per-doc window
-    "kneser_ney_bigram_report",      # bigram counts + vocab-keyed joins
-    "zipf_slope_by_source",          # per-source WindowGroupLimit + OLS
-    "term_burstiness_report",        # two-level term aggregation
-    "neardup_source_flow_matrix",    # LSH pairs + source lookups
-    "growth_accounting_daily",       # distinct collapse + user windows
-    "decile_lift_table",             # global-rank offsets machinery
-    "asof_nearest_event",            # dual ignorenulls carries
-    "dedup_threshold_sweep",         # one verify pass, 7 thresholds
-    "hybrid_tier2_search",           # tier2 dense+sparse+text RRF
-    "collocation_pmi_report",        # bigram counts + PMI (batch 6)
-    "type_hour_mutual_information",  # cell agg + grid-ln MI (batch 6)
-    "positional_template_entropy",   # bounded prefix explode (batch 7)
-]
-
-
 def build_scaled(spark, out: Path, factor: int) -> None:
     if out.exists():
         shutil.rmtree(out)
@@ -185,8 +163,6 @@ def main() -> int:
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument("--out", default="/tmp/via_scaleup")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--staged", action="store_true",
-                    help="probe the staged (r10) representatives instead")
     ap.add_argument("--probes", default=None,
                     help="comma-separated probe subset (for big --factor runs"
                          " where the token-explode families would dominate"
@@ -203,10 +179,9 @@ def main() -> int:
         build_scaled(spark, out, args.factor)
 
     import __spark_entry__ as em
-    from via_spark import staging
 
-    qs = {**em.queries(), **staging.staged_queries()}
-    probes = STAGED_PROBES if args.staged else PROBES
+    qs = em.queries()
+    probes = PROBES
     if args.probes:
         probes = [p.strip() for p in args.probes.split(",") if p.strip()]
 

@@ -56,8 +56,9 @@ CADENCE_SEC = 60.0         # the reference worker's cadence (the budget)
 # point (app/worker.py:13 sleep(60)); the event-time WINDOW stays
 # WINDOW_SEC regardless. Triggering the same analysis at 15 s bounds
 # worst-case detection latency by trigger phase (15 s) + compute (~2 s)
-# instead of a full cadence — SOAK_r9 measured 59.5 s against the 60 s
-# budget purely from phase alignment, and SOAK_r12's 35.6 s bounce vs
+# instead of a full cadence — history/SOAK_r9.json measured 59.5 s
+# against the 60 s budget purely from phase alignment, and
+# history/SOAK_r12.json's 35.6 s bounce vs
 # r11's 19.1 s was the same quantization under a 30 s trigger (compute
 # actually got FASTER; VERDICT r12 wrong #1). Spark's processing-time
 # executor aligns fires to wall-clock multiples of the interval, so the

@@ -1,7 +1,8 @@
-"""Round-10 staged queries: same oracle-parity gate as the registered
-surface (tests/test_oracle_parity.py), run from via_spark.staging —
-implementation + oracle are proven NOW; only driver registration waits
-for the r10 head slots (see via_spark/staging.py docstring).
+"""Operator models, planted cases and plan shapes: Spark operators
+checked against pure-Python reference models, against hand-computed
+answers on planted inputs, and for scale-critical executed-plan shapes.
+DuckDB value parity for the same queries lives in
+tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -11,32 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from via_spark import staging
-from tests.parity import compare, duck_con
-
-STAGED = staging.staged_queries()
-STAGED_ORACLES = staging.staged_oracle_sql()
-
-
-@pytest.fixture(scope="module")
-def con(sf_oracle):
-    c = duck_con(sf_oracle)
-    yield c
-    c.close()
-
-
-def test_staging_contract():
-    """Every staged query has an oracle, and none shadows a registered
-    query (the r10 splice must be additive)."""
-    assert set(STAGED.keys()) == set(STAGED_ORACLES.keys())
-    assert not set(STAGED.keys()) & set(entrymod.queries().keys())
-
-
-@pytest.mark.parametrize("name", sorted(STAGED.keys()))
-def test_staged_query_matches_oracle(name, spark, sf_oracle, con):
-    df = STAGED[name](spark, sf_oracle)
-    ok, msg = compare(df, con, STAGED_ORACLES[name])
-    assert ok, f"{name}: {msg}"
 
 
 def test_quartiles_over_matches_python_model(spark):
@@ -355,9 +330,7 @@ def test_mann_whitney_planted_shift(spark):
 def _splan(spark, sf_oracle, name: str) -> str:
     from via_spark.plans import executed_plan
 
-    # Post-splice the staged registry is drained and these queries live
-    # on the registered surface — the plan pins keep guarding them there.
-    fn = STAGED.get(name) or entrymod.queries()[name]
+    fn = entrymod.queries()[name]
     return executed_plan(fn(spark, sf_oracle))
 
 
@@ -486,40 +459,6 @@ def test_forecast_backtest_planted_regimes(spark):
     assert got["flat"]["n"] == got["flat"]["s"] == got["flat"]["d"] == 0
 
 
-def test_staged_builders_are_lazy(spark, sf_oracle):
-    """The queries() contract the staged entries will join: building a
-    DataFrame runs NO Spark action (the driver may build all plans
-    before executing any)."""
-    from unittest import mock
-
-    from pyspark.sql import DataFrame
-
-    def _no_jobs(name):
-        def fail(self, *a, **k):  # pragma: no cover - failure path
-            raise AssertionError(f"ran DataFrame.{name} at build time")
-        return fail
-
-    # warm the session store once (dedup_clusters' label table is
-    # materialized by its own registered query; the staged histogram
-    # only READS it)
-    from via_spark.operators.graph import dedup_clusters
-
-    dedup_clusters(spark, sf_oracle).count()
-
-    with mock.patch.multiple(
-        DataFrame,
-        first=_no_jobs("first"),
-        collect=_no_jobs("collect"),
-        count=_no_jobs("count"),
-        take=_no_jobs("take"),
-        head=_no_jobs("head"),
-        toPandas=_no_jobs("toPandas"),
-    ):
-        for name, fn in STAGED.items():
-            df = fn(spark, sf_oracle)
-            assert df.columns, name
-
-
 def test_linear_attribution_conserves_value(spark, sf_oracle):
     """The remainder-to-newest-touch design means credits sum EXACTLY
     to the purchase value mass — no 1/n leak at any group count."""
@@ -539,63 +478,6 @@ def test_linear_attribution_conserves_value(spark, sf_oracle):
         .collect()[0][0]
     )
     assert credited == exact
-
-
-def test_splice_script_on_copies(tmp_path):
-    """Regression-test scripts/splice_staging.py against TEMP copies:
-    both dicts gain exactly the staged names (queries as callables —
-    the round-7 SQL-string-leak trap), the parity pin bumps, and the
-    staging registry drains, all without touching the working tree."""
-    import ast
-    import shutil
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    (tmp_path / "tests").mkdir()
-    (tmp_path / "via_spark").mkdir()
-    shutil.copy(repo / "__spark_entry__.py", tmp_path / "__spark_entry__.py")
-    shutil.copy(repo / "tests" / "test_oracle_parity.py",
-                tmp_path / "tests" / "test_oracle_parity.py")
-    shutil.copy(repo / "via_spark" / "staging.py",
-                tmp_path / "via_spark" / "staging.py")
-
-    sys.path.insert(0, str(repo / "scripts"))
-    try:
-        import splice_staging
-    finally:
-        sys.path.pop(0)
-    from via_spark import staging as live_staging
-
-    n_staged = len(live_staging.staged_queries())
-    if n_staged == 0:
-        return  # post-splice repo state: nothing to test
-    assert splice_staging.main(tmp_path) == 0
-
-    tree = ast.parse((tmp_path / "__spark_entry__.py").read_text())
-    dicts = {}
-    for node in tree.body:
-        if isinstance(node, ast.FunctionDef) and node.name in ("queries", "oracle_sql"):
-            ret = node.body[-1]
-            assert isinstance(ret, ast.Return) and isinstance(ret.value, ast.Dict)
-            dicts[node.name] = ret.value
-    q_keys = [k.value for k in dicts["queries"].keys]
-    o_keys = [k.value for k in dicts["oracle_sql"].keys]
-    assert set(q_keys) == set(o_keys) and len(q_keys) == len(set(q_keys))
-    for name in live_staging.staged_queries():
-        assert name in q_keys and name in o_keys
-    # queries() values must be callables (module.func attributes or the
-    # module-local _wrappers), NEVER string constants — the round-7
-    # SQL-string-leak guard; oracle values are oracles.x_sql() calls
-    assert all(
-        isinstance(v, (ast.Attribute, ast.Name)) for v in dicts["queries"].values
-    )
-    assert all(isinstance(v, ast.Call) for v in dicts["oracle_sql"].values)
-
-    ptxt = (tmp_path / "tests" / "test_oracle_parity.py").read_text()
-    assert f"== len(ORACLES) == {len(q_keys)}" in ptxt
-    stxt = (tmp_path / "via_spark" / "staging.py").read_text()
-    assert "return {}" in stxt
 
 
 # --- r10 staged batch: hybrid tier2, tolerant federation, dial QA ---
@@ -1080,9 +962,7 @@ def test_batch45_plan_shapes(spark, sf_oracle):
     CartesianProduct."""
     import __spark_entry__ as entrymod
 
-    # the r10 batch spliced into the registered surface at r11 — the
-    # plan pins keep running against wherever the queries now live
-    qs = {**entrymod.queries(), **staging.staged_queries()}
+    qs = entrymod.queries()
 
     def plan(name):
         return qs[name](spark, sf_oracle)._jdf.queryExecution().executedPlan().toString()
@@ -1165,69 +1045,3 @@ def test_positional_template_entropy_planted(spark, tmp_path):
     # {2,2}: ln(4) - (2·ln2 + 2·ln2)/4 = ln(4) - ln(2) = ln(2)
     assert got[("tpl", 1)] == (4, 2, ln4 - ln2)
     assert got[("org", 0)] == (4, 4, ln4)               # all distinct
-
-
-def test_tau_sweep_pins_store_flagged_count(spark, sf_oracle):
-    """The tau_pct = 30 row of semdedup_tau_sweep must equal the
-    SemDeDup store's flagged count — the sweep and the store share the
-    cell confinement and SEMDEDUP_TAU = 0.3, so a drift here means the
-    sweep stopped measuring the production dial."""
-    from via_spark.operators.vector import semdedup_assignments, semdedup_tau_sweep
-
-    n_flagged = (
-        semdedup_assignments(spark, sf_oracle)
-        .where(F.col("is_dup"))
-        .count()
-    )
-    row = {
-        r["tau_pct"]: r["n_dups"]
-        for r in semdedup_tau_sweep(spark, sf_oracle).collect()
-    }
-    assert row[30] == n_flagged
-    # monotone: raising tau can only shrink the dup set
-    taus = sorted(row)
-    assert all(row[a] >= row[b] for a, b in zip(taus, taus[1:]))
-
-
-def test_minpts_sweep_pins_density_labels(spark, sf_oracle):
-    """The min_pts = DENSITY_MIN_PTS row of density_minpts_sweep must
-    equal lsh_density_outliers' flagged count (same pass, same dial),
-    and the curve must be monotone non-decreasing in min_pts."""
-    from via_spark.operators.dedup import (
-        DENSITY_MIN_PTS,
-        density_minpts_sweep,
-        lsh_density_outliers,
-    )
-
-    n_out = (
-        lsh_density_outliers(spark, sf_oracle).where(F.col("is_outlier")).count()
-    )
-    rows = {
-        r["min_pts"]: r["n_outliers"]
-        for r in density_minpts_sweep(spark, sf_oracle).collect()
-    }
-    assert rows[DENSITY_MIN_PTS] == n_out
-    ms = sorted(rows)
-    assert all(rows[a] <= rows[b] for a, b in zip(ms, ms[1:]))
-
-
-def test_bits_dial_adaptive_row_pins_production_pairs(spark, sf_oracle):
-    """The adaptive row of lsh_bits_dial_report must agree with the
-    production pair query (same pipeline): n_pairs == count of
-    neardup_embedding_pairs. The A/B isolates the DIAL, so the
-    baseline row cannot drift from what production runs."""
-    from via_spark.operators.dedup import (
-        lsh_bits_dial_report,
-        neardup_embedding_pairs,
-    )
-
-    n_pairs = neardup_embedding_pairs(spark, sf_oracle).count()
-    rows = {
-        r["variant"]: r for r in lsh_bits_dial_report(spark, sf_oracle).collect()
-    }
-    assert rows["adaptive"]["n_pairs"] == n_pairs
-    # every variant's kept pairs are bounded by its candidates, and
-    # recall hits are bounded by the truth set
-    for r in rows.values():
-        assert r["n_pairs"] <= r["n_candidates"]
-        assert r["n_sample_hit"] <= r["n_sample_truth"]

@@ -198,30 +198,6 @@ def test_probe_buckets_cover_exact_hamming_ball(spark, bucket, radius):
     assert set(got) == ball
 
 
-def test_simhash_sql_twin_equality(spark):
-    """simhash_hex_sql (the F.expr build-time twin) must render the
-    exact fingerprint of the Column-lambda form on adversarial token
-    streams (empty-ish, unicode, long, vote-tie-prone repeats)."""
-    from pyspark.sql import functions as F
-
-    from via_spark.functions.simhash import simhash_hex, simhash_hex_sql
-
-    rows = [
-        (0, ["a"]),
-        (1, ["a", "a", "b"]),
-        (2, [f"tok{i}" for i in range(200)]),
-        (3, ["ünïcode", "日本語", "a b"]),
-        (4, ["x"] * 7 + ["y"] * 7),
-    ]
-    df = spark.createDataFrame(rows, "id long, toks array<string>").select(
-        "id",
-        simhash_hex(F.col("toks")).alias("col_form"),
-        simhash_hex_sql("toks").alias("sql_form"),
-    )
-    for r in df.collect():
-        assert r["col_form"] == r["sql_form"], r["id"]
-
-
 def test_hamming_keys_sql_twin_equality(spark):
     """_hb_keys_sql / _canonical_sid_sql (F.expr build-time twins) must
     equal the Column forms bit-for-bit, including bit-63 fingerprints."""
@@ -536,73 +512,6 @@ def test_global_prefix_sum_matches_cumsum(spark, rows):
     assert got == expect
 
 
-def test_rotation_head_policy():
-    """The driver records CORRECTNESS rows for only the first 50
-    queries() entries.  Change-aware policy (see queries() docstring):
-    the head must lead with every query that NEEDS a driver row — never
-    verified, or implementing modules changed since its newest green
-    CORRECTNESS row (git-derived, via_spark.rotation) — stalest first.
-    A new query buried in the tail, or a changed query coasting on a
-    stale green row while head slots go to unchanged queries, fails
-    here before the round's signal is silently lost."""
-    from pathlib import Path
-
-    import pytest
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    names = list(entrymod.queries())
-    head, tail = names[:50], names[50:]
-    # the head must actually be full while a tail exists
-    assert len(head) == 50 or not tail
-
-    def head_matches(required: list[str]) -> str | None:
-        """None if the committed head satisfies ``required``; else why."""
-        if len(required) >= len(head):
-            # more re-checks pending than slots: every slot must go to
-            # the stalest required queries — none wasted on a query
-            # whose green row is still current
-            expected = set(required[: len(head)])
-            if set(head) != expected:
-                return (
-                    f"missing={sorted(expected - set(head))}, "
-                    f"extra={sorted(set(head) - expected)}"
-                )
-            return None
-        buried = [q for q in required if q in set(tail)]
-        return f"buried={buried}" if buried else None
-
-    try:
-        # The head is committed BEFORE a round's CORRECTNESS file lands,
-        # so between the artifact commit and the next round's reorder the
-        # current-state recommendation legitimately differs from the one
-        # the head was built against. Accept either: the current state,
-        # or the state as of the previous round's artifacts.
-        required_now = rotation.recommended_head(repo, entrymod.queries())
-        latest = rotation.latest_round(repo)
-        required_prev = rotation.recommended_head(
-            repo, entrymod.queries(),
-            max_round=(latest - 1) if latest is not None else None,
-        )
-    except Exception as exc:  # no git history (exported tree) — fall
-        # back to the weaker never-verified-only invariant
-        verified = set(rotation.newest_green_rounds(repo))
-        buried = [q for q in tail if q not in verified]
-        assert not buried, (
-            f"never-driver-verified queries below position 50: {buried}"
-        )
-        pytest.skip(f"git-derived change tracking unavailable: {exc}")
-
-    why_now = head_matches(required_now)
-    why_prev = head_matches(required_prev)
-    assert why_now is None or why_prev is None, (
-        f"head violates the rotation policy in both the current state "
-        f"({why_now}) and the pre-latest-artifact state ({why_prev})"
-    )
-
-
 def test_fixture_ranked_columns_non_null(spark, sf_oracle):
     """Parity invariant behind the rank-ordered oracles: Spark ASC puts
     NULLs first while DuckDB ASC puts them last, so rank-over-value
@@ -792,60 +701,6 @@ def test_leakage_safe_split_never_splits_a_cluster(spark, sf_oracle):
     assert torn == 0, f"{torn} clusters have members on both split sides"
 
 
-def test_rotation_import_closure_is_transitive_and_sees_local_imports():
-    """The rotation machinery is load-bearing for the driver signal: an
-    import form it fails to resolve silently shrinks a query's tracked
-    closure and lets a changed dependency keep stale green credit.  Pin
-    the load-bearing properties: transitivity (graph → dedup → vector/
-    text/session), function-LOCAL imports (curation.leakage_safe_split
-    imports graph inside the function body), and wrapper mapping."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    closure = rotation.module_import_closure(repo)
-
-    g = closure["via_spark/operators/graph.py"]
-    assert "via_spark/operators/dedup.py" in g            # direct
-    assert "via_spark/operators/vector.py" in g           # via dedup
-    assert "via_spark/functions/text.py" in g             # via dedup
-    assert "via_spark/session.py" in g                    # ubiquitous
-
-    c = closure["via_spark/operators/curation.py"]
-    assert "via_spark/operators/graph.py" in c            # function-local import
-    assert "via_spark/operators/rank.py" in c
-
-    impl = rotation.query_impl_paths(repo, entrymod.queries())
-    assert "via_spark/store.py" in impl["tier1_view"]     # WRAPPER_DEPS
-    assert "via_spark/operators/rhythm.py" in impl["rhythm_anomalies"]
-    assert "via_spark/operators/dedup.py" in impl["dedup_clusters"]
-    # every query resolves to at least one tracked module file
-    assert all(paths for paths in impl.values())
-
-
-def test_rotation_green_rounds_match_committed_artifacts():
-    """newest_green_rounds must read the committed CORRECTNESS history
-    correctly — r6's head queries are green at >=6, r4-era tail queries
-    at >=4, and nothing is green that never had a row."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    greens = rotation.newest_green_rounds(repo)
-    assert greens.get("above_p95_events", 0) >= 6
-    assert greens.get("forensic_clusters_windowed", 0) >= 6
-    assert greens.get("tier1_view", 0) >= 4
-    assert "no_such_query" not in greens
-    # the recommendation is sorted stalest-first
-    head = rotation.recommended_head(repo, entrymod.queries())
-    rounds = [greens.get(q, -1) for q in head]
-    assert rounds == sorted(rounds)
-
-
 def test_funnels_boundary_semantics(spark, tmp_path):
     """Planted journeys pin the funnel contracts oracle parity alone
     cannot distinguish from a spec error written twice: first-touch
@@ -963,44 +818,6 @@ def test_session_window_gap_boundary(spark):
     assert got == expect
 
 
-def test_rotation_tracks_oracle_changes():
-    """The driver verifies query AND oracle together, so an edited
-    oracle must invalidate a green row exactly like edited operator
-    code. Against the real r6 artifact commit: the round-7 oracle edits
-    (session-window gap predicate, fixed-point p95) must be flagged,
-    per-function granularity must leave untouched oracles unflagged,
-    and every flagged query must sit in the recommended head list."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    c6 = rotation.round_commit(repo, 6)
-    if c6 is None:
-        import pytest
-
-        pytest.skip("no r6 artifact commit in history")
-    names = list(entrymod.queries())
-    changed = rotation.oracle_changed_queries(repo, c6, names)
-    assert {"session_hash_counts", "range_containment_join",
-            "above_p95_events", "hourly_value_p95"} <= changed
-    # per-function granularity: an oracle edit must not flood the
-    # whole surface (only if shared helpers/constants change). Queries
-    # ADDED after r6 trivially count as changed (their oracle didn't
-    # exist), so the flood check is over the r6-era survivors only —
-    # otherwise the threshold goes stale every time the surface grows.
-    green_at_6 = rotation.newest_green_rounds(repo, max_round=6)
-    old_names = [n for n in names if n in green_at_6]
-    old_changed = changed & set(old_names)
-    assert len(old_changed) < len(old_names) / 2
-    required = rotation.recommended_head(repo, entrymod.queries())
-    assert set(changed) <= set(required) | {
-        q for q in changed
-        if rotation.newest_green_rounds(repo).get(q, 0) >= 7
-    }
-
-
 def test_connected_components_long_chain_guard(spark):
     """Alternating large-star/small-star contraction converges in
     O(log² n) rounds on ANY id layout — the random-graph property test
@@ -1028,134 +845,6 @@ def test_connected_components_long_chain_guard(spark):
 
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(verts, chain, max_iter=2)
-
-
-def test_rotation_closure_equals_bruteforce_reachability():
-    """ADVICE-r7 (medium): the old DFS memoized closures computed under
-    a path-dependent ``seen`` set, so inside import cycles 13 modules'
-    closures missed reachable deps (store.py's omitted embed.py) and 65
-    queries could keep stale green credit after an edit. The fixpoint
-    closure must equal brute-force BFS reachability for EVERY module."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    edges = rotation.module_import_edges(repo)
-    closure = rotation.module_import_closure(repo)
-    assert set(edges) == set(closure)
-    for start in edges:
-        seen = {start}
-        frontier = [start]
-        while frontier:
-            m = frontier.pop()
-            for d in edges.get(m, ()):
-                if d not in seen:
-                    seen.add(d)
-                    frontier.append(d)
-        assert closure[start] == seen, (
-            f"closure({start}) != BFS reachability: "
-            f"missing={sorted(seen - closure[start])}, "
-            f"extra={sorted(closure[start] - seen)}"
-        )
-    # the concrete r7 counterexample: store.py participates in the
-    # package's import cycle and must see embed.py through it
-    assert "via_spark/functions/embed.py" in closure["via_spark/store.py"]
-
-
-def test_rotation_unit_sources_granularity():
-    """The per-unit fingerprint splitter is what keeps the backlog
-    convergent: docstrings are invisible, an added constant or an
-    extended import list only changes its own binding, a touched
-    function only changes itself, and an unattributable statement falls
-    into the ``<module>`` residue."""
-    from via_spark import rotation
-
-    base = (
-        '"""module doc."""\n'
-        "import os\n"
-        "from pyspark.sql import functions as F, DataFrame\n"
-        "A = 1\n"
-        "def f(x):\n    return A + x\n"
-        "def g(x):\n    return f(x)\n"
-    )
-
-    def delta(new: str) -> set[str]:
-        old_u = rotation._unit_sources(base)
-        new_u = rotation._unit_sources(new)
-        return {
-            n
-            for n in set(old_u) | set(new_u)
-            if old_u.get(n) != new_u.get(n)
-        }
-
-    assert delta(base.replace("module doc", "edited doc")) == set()
-    # function docstrings and formatting are stripped from fingerprints
-    doc_fn = base.replace(
-        "def f(x):\n    return A + x",
-        'def f(x):\n    """docs."""\n    return A + x',
-    )
-    assert delta(doc_fn) == set()
-    assert delta(base.replace("return A + x", "return (A +  x)")) == set()
-    assert delta(base + "B = 2\n") == {"B"}
-    assert delta(
-        base.replace("functions as F, DataFrame", "functions as F, DataFrame, Window")
-    ) == {"Window"}
-    assert delta(base.replace("return A + x", "return A - x")) == {"f"}
-    assert delta(base.replace("A = 1", "A = 2")) == {"A"}
-    assert delta(base + "print('side effect')\n") == {rotation._SHARED_UNIT}
-
-
-def test_rotation_reference_graph_reachability():
-    """The unit-level reach that gates change-flagging must see real
-    dependency shapes: a helper called by two operators in different
-    modules (p95_rank_threshold via a function-local import), constants
-    referenced through ``from`` imports, and — the precision claim — a
-    sibling function in the same module staying OUT of an unrelated
-    query's reach."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    reach = rotation.query_reach(repo, entrymod.queries())
-
-    stats_p = "via_spark/operators/stats.py"
-    assert (stats_p, "p95_rank_threshold") in reach["above_p95_events"]
-    # cross-module, function-local import
-    assert (stats_p, "p95_rank_threshold") in reach["hourly_value_p95"]
-    # constant through the dedup band-cap chain
-    dedup_p = "via_spark/operators/dedup.py"
-    assert (dedup_p, "BAND_KEY_CAP") in reach["dedup_minhash_pairs"]
-    # precision: an unrelated sibling in the same module is NOT reached
-    rel_p = "via_spark/operators/relational.py"
-    assert (rel_p, "newest_events") in reach["newest_events"]
-    assert (rel_p, "daily_revenue_share") not in reach["newest_events"]
-    # every query reaches at least its own unit
-    assert all(r for r in reach.values())
-
-
-def test_rotation_fails_closed_without_round_commit():
-    """ADVICE-r7 (low): a green round whose CORRECTNESS artifact was
-    never committed has no 'verified as of' baseline — the old code
-    treated it as an empty diff (fail-open green credit). Now every
-    query green only in such a round must be flagged for re-check."""
-    from pathlib import Path
-    from unittest import mock
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    qs = entrymod.queries()
-    greens = rotation.newest_green_rounds(repo)
-    with mock.patch.object(rotation, "round_commit", lambda repo, n: None):
-        required = set(rotation.recommended_head(repo, qs))
-    assert set(greens) & set(qs) <= required, (
-        "unanchored green rows must fail closed"
-    )
 
 
 P95_ROWS = st.lists(
@@ -1195,29 +884,6 @@ def test_p95_rank_threshold_matches_reference(spark, rows):
         thr = next(v for i, v in enumerate(vs) if 100 * (i + 1) >= 95 * n)
         expect.add((g, thr, n))
     assert got == expect
-
-
-def test_rotation_every_oracle_builder_resolves():
-    """oracle_changed_queries maps query → builder by the `<query>_sql`
-    convention (plus ORACLE_FN_EXCEPTIONS). A builder that never
-    matches a unit in oracles.py would be invisible to change tracking
-    from day one — its query could coast on stale oracle credit
-    forever. Pin that every oracled query resolves to a real unit."""
-    from pathlib import Path
-
-    import __spark_entry__ as entrymod
-    from via_spark import rotation
-
-    repo = Path(entrymod.__file__).resolve().parent
-    units = rotation._unit_sources(
-        (repo / "via_spark" / "oracles.py").read_text()
-    )
-    missing = [
-        q
-        for q in entrymod.oracle_sql()
-        if rotation.ORACLE_FN_EXCEPTIONS.get(q, f"{q}_sql") not in units
-    ]
-    assert not missing, f"builders unresolvable to oracles.py units: {missing}"
 
 
 SCRUB_DOCS = st.lists(

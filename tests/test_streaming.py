@@ -8,6 +8,7 @@ windowed aggregation checked against its batch equivalent.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from via_spark.operators import promote, rhythm
@@ -1159,6 +1160,36 @@ def test_store_has_data_sees_through_metadata_shell(spark, tmp_path):
         _jsc = None
     assert pipeline._store_has_data(_NoJvm(), str(store)) is True
     assert pipeline._store_has_data(_NoJvm(), str(tmp_path / "nope")) is False
+
+
+# store kind -> (fold, batch schema, store rows, incoming row)
+_SET_MERGES = {
+    "kmv": (pipeline.merge_kmv_partials, "day long, uh long",
+            [(1, h) for h in range(10)], (1, 99)),
+    "bloom": (pipeline.merge_bloom_partials, "pos long",
+              [(p,) for p in range(10)], (99,)),
+    "sample": (pipeline.merge_sample_partials,
+               "grp string, sk long, tie long, vfix long",
+               [("g", h, h, h) for h in range(10)], ("g", 99, 99, 99)),
+    "hll": (pipeline.merge_hll_partials, "day long, reg long, rank int",
+            [(1, r, 2) for r in range(10)], (1, 99, 3)),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_SET_MERGES))
+def test_sketch_merge_read_error_keeps_store(spark, tmp_path, kind):
+    """Only a missing store means "first batch": an unreadable data file
+    in an existing store must fail the fold and leave every store file
+    as it was, never overwrite the store with the incoming batch alone."""
+    merge, schema, rows, incoming = _SET_MERGES[kind]
+    store = tmp_path / kind
+    merge(spark, spark.createDataFrame(rows, schema), str(store))
+    (data,) = store.glob("part-*.parquet")
+    data.write_bytes(b"not parquet")
+    before = {p.name: p.read_bytes() for p in store.iterdir()}
+    with pytest.raises(Exception):
+        merge(spark, spark.createDataFrame([incoming], schema), str(store))
+    assert {p.name: p.read_bytes() for p in store.iterdir()} == before
 
 
 def test_streaming_hll_store_matches_batch_sketch(spark, sf_smoke, tmp_path):

@@ -722,14 +722,14 @@ def test_simhash_arrow_bit_identical_to_native(spark, sf_oracle):
     plus adversarial token streams: empty-ish docs (1 token), vote ties
     (even token counts with repeated tokens), unicode tokens (utf-8
     byte hashing), and long repetitive streams."""
-    from via_spark.functions.simhash import simhash_hex_arrow, simhash_hex_sql
+    from via_spark.functions.simhash import simhash_hex_arrow
     from via_spark.functions.text import tokens
     from via_spark.session import load_table
 
     d = load_table(spark, sf_oracle, "documents")
     t = d.withColumn("toks", tokens(F.col("text"))).where(F.size("toks") > 0)
     mismatch = t.where(
-        simhash_hex_sql("toks") != simhash_hex_arrow(F.col("toks"))
+        simhash_hex(F.col("toks")) != simhash_hex_arrow(F.col("toks"))
     ).count()
     assert mismatch == 0
 
@@ -743,7 +743,7 @@ def test_simhash_arrow_bit_identical_to_native(spark, sf_oracle):
     ]
     df = spark.createDataFrame(rows, "toks array<string>")
     got = df.select(
-        simhash_hex_sql("toks").alias("native"),
+        simhash_hex(F.col("toks")).alias("native"),
         simhash_hex_arrow(F.col("toks")).alias("arrow"),
     ).collect()
     assert all(r["native"] == r["arrow"] for r in got), got

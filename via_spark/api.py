@@ -24,7 +24,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import control, forensic, promote, rhythm, schema_infer
 from via_spark.session import configure
 
@@ -69,14 +68,7 @@ class VIAEngine:
         template + sha256 pipeline executes ONCE, not once per count."""
         from pyspark.sql import Observation
 
-        tier1 = (
-            flat.withColumn(
-                "event_id", F.abs(F.xxhash64("service", "severity", "body", "ts"))
-            )
-            .withColumn("template", template(F.col("body")))
-            .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
-            .withColumn("event_date", promote.event_date(F.col("ts")))
-        )
+        tier1 = promote.tier1_rows(flat)
         obs = Observation()
         (
             tier1.observe(obs, F.count(F.lit(1)).alias("n"))

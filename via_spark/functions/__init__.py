@@ -8,7 +8,6 @@ from via_spark.functions.embed import (  # noqa: F401
 from via_spark.functions.simhash import (  # noqa: F401
     hamming_hex,
     simhash_hex,
-    simhash_votes,
     votes_to_hex,
 )
 from via_spark.functions.text import (  # noqa: F401

@@ -17,9 +17,9 @@ SQL-expressible definition (SURVEY.md §7.4 decision 3):
 
 Everything is JVM-native (sha2 / conv / higher-order functions) — no
 Python in the row path — and exactly reproducible in ANSI SQL for the
-DuckDB oracle. The two-step votes→hex API exists so callers materialize
-the vote array once per row (``withColumn``) instead of duplicating the
-aggregate subtree 64× in one expression.
+DuckDB oracle. This native form is the reference that the Arrow
+kernel used in production (:func:`simhash_hex_arrow`) is pinned
+bit-identical to.
 """
 
 from __future__ import annotations
@@ -52,15 +52,6 @@ def _votes_for_hash(h: Column) -> Column:
     )
 
 
-def simhash_votes(tokens_col: Column) -> Column:
-    """Bit-vote accumulation: array<int> of 64 signed vote sums."""
-    return F.aggregate(
-        token_hashes(tokens_col),
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(acc, _votes_for_hash(h), lambda a, v: a + v),
-    )
-
-
 def votes_to_hex(votes: Column) -> Column:
     """Vote array → 16-char lowercase hex fingerprint (nibble 0 first).
 
@@ -87,46 +78,13 @@ def simhash_hex(tokens_col: Column) -> Column:
 
     The hex rendering runs in ``aggregate``'s *finish* lambda, where the
     vote array is a bound lambda variable — evaluated once no matter how
-    many times the rendering references it. This is the form to use in
-    projections; the votes/hex split above exists for callers that
-    materialize the vote array themselves.
+    many times the rendering references it.
     """
     return F.aggregate(
         token_hashes(tokens_col),
         F.array_repeat(F.lit(0), SIMHASH_BITS),
         lambda acc, h: F.zip_with(acc, _votes_for_hash(h), lambda a, v: a + v),
         votes_to_hex,
-    )
-
-
-def simhash_hex_sql(tokens_col: str) -> Column:
-    """F.expr twin of :func:`simhash_hex` over a NAMED token column —
-    one JVM parse of a generated SQL string instead of ~10³ py4j
-    Column calls (the lambda builders cost ~0.8 s of driver time per
-    query build, measured r12 — more than the fingerprint's executor
-    time at fixture scale). Token-for-token the same expression: same
-    per-nibble decode, same ±1 votes, same >= 0 tie-to-1 rendering —
-    equality with the Column form is pinned by
-    tests/test_properties.py::test_simhash_sql_twin_equality."""
-    votes = ", ".join(
-        f"(shiftright(CAST(conv(substring(h, {b // 4 + 1}, 1), 16, 10) "
-        f"AS INT), {b % 4}) & 1) * 2 - 1"
-        for b in range(SIMHASH_BITS)
-    )
-    nibble = (
-        "format_string('%x', "
-        "(CASE WHEN element_at(acc, i * 4 + 1) >= 0 THEN 1 ELSE 0 END) + "
-        "(CASE WHEN element_at(acc, i * 4 + 2) >= 0 THEN 2 ELSE 0 END) + "
-        "(CASE WHEN element_at(acc, i * 4 + 3) >= 0 THEN 4 ELSE 0 END) + "
-        "(CASE WHEN element_at(acc, i * 4 + 4) >= 0 THEN 8 ELSE 0 END))"
-    )
-    return F.expr(
-        f"aggregate(transform({tokens_col}, "
-        "t -> substring(sha2(t, 256), 1, 16)), "
-        f"array_repeat(0, {SIMHASH_BITS}), "
-        f"(acc, h) -> zip_with(acc, array({votes}), (a, v) -> a + v), "
-        f"acc -> array_join(transform(sequence(0, {_NIBBLES - 1}), "
-        f"i -> {nibble}), ''))"
     )
 
 

@@ -125,7 +125,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:

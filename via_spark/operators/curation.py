@@ -1088,7 +1088,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str, l: int = 2,
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 SN_WINDOW = 3  # sorted-neighborhood width (pairs per row = w)
 
@@ -1105,7 +1105,7 @@ def sorted_neighborhood_pairs(
     typos of any edit distance), while SymSpell is complete for d ≤ 1
     but explodes keys on long strings. Production ER runs both and
     unions (multi-pass blocking); the recall relationship is pinned in
-    tests/test_staging.py (SN ⊆ SymSpell at d ≤ 1, measured recall).
+    tests/test_operator_models.py (SN ⊆ SymSpell at d ≤ 1, measured recall).
 
     Scale posture: ONE global sort via rank.global_row_number (range
     partition + broadcast offsets), then candidates come from an
@@ -1181,7 +1181,7 @@ def t_closeness_audit(
 
 def t_closeness_over(d: DataFrame, t_micro: int = T_CLOSENESS_T_MICRO) -> DataFrame:
     """Core ordered-EMD audit over ANY (lang, source, sens) frame —
-    planted-distribution tested in tests/test_staging.py."""
+    planted-distribution tested in tests/test_operator_models.py."""
     per = d.groupBy("lang", "source", "sens").agg(F.count(F.lit(1)).alias("c_g"))
     w_glob = Window.orderBy("sens").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     glob = (

@@ -35,7 +35,6 @@ import itertools
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from via_spark.functions.simhash import simhash_hex
 from via_spark.functions.text import tokens
 from via_spark.operators.vector import cosine_from_fix, dot_fix, dot_fix_arrow
 from via_spark.session import load_table, nopush, spread
@@ -525,7 +524,7 @@ def _sign_bucket(emb: Column, dims: int = 8, offset: int = 0) -> Column:
 # query builders stay pure-lazy plan builders and the dial tracks any
 # corpus size with no config change — at sf0.1 (N=2000) it lands on the
 # historical bits=8; at 10x it lands on 12, the measured sweet spot
-# (SCALEUP_STAGED_r9.json "bits_dial_ab": FIXED 8 bits = 36x wall at
+# (history/SCALEUP_STAGED_r9.json "bits_dial_ab": FIXED 8 bits = 36x wall at
 # 10x corpus; bits=12 = 2.5x). Higher bits trade recall for cost — the
 # standard LSH dial, measured by ann_recall_report.
 SIGN_TARGET_OCCUPANCY = 8
@@ -2096,7 +2095,7 @@ def incremental_span_pairs(
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 DENSITY_TAU = 0.2      # neighbor similarity floor (looser than the 0.4 dup cut)
 DENSITY_MIN_PTS = 2    # neighbors below this => semantic outlier
@@ -2128,7 +2127,7 @@ def lsh_density_outliers(
     dial: the bucket space is 2^bits, so per-bucket occupancy — and
     with it candidate volume, which is quadratic per bucket — stays
     constant only if ``bits`` grows with log2 of the corpus (measured
-    in SCALEUP_STAGED_r9.json: at 10× corpus under FIXED bits the
+    in history/SCALEUP_STAGED_r9.json: at 10× corpus under FIXED bits the
     candidate set grows ~100×; the dial exists precisely for that).
     The default ``bits=None`` sizes the dial adaptively inside the plan
     (see SIGN_TARGET_OCCUPANCY); an int pins it for A/B probes. No pair
@@ -2231,7 +2230,7 @@ def embedding_bucket_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIGN_TARGET_OCCUPANCY with no giant bucket; a fat tail here is the
     early warning that candidate volume (quadratic per bucket) is about
     to blow up — the measured failure mode of the r9 fixed-8-bit
-    queries (SCALEUP_STAGED_r9.json). One scan + two hash aggs; output
+    queries (history/SCALEUP_STAGED_r9.json). One scan + two hash aggs; output
     is <= max-occupancy rows.
     """
     e = adaptive_sign_frame(
@@ -2418,167 +2417,4 @@ def neardup_source_flow_matrix(
         "src_b",
         "n_pairs",
         F.expr("n_pairs * 1000000L div total").alias("share_micro"),
-    )
-
-
-# --- round-13 staged additions (per-dial regression corpus) ---
-
-BITS_DIAL_FIXED = (4, 8, 12)  # pinned A/B settings beside the adaptive dial
-DENSITY_MINPTS_GRID = (1, 2, 3, 4, 5, 6, 7, 8)
-
-
-def lsh_bits_dial_report(
-    spark: SparkSession, sf_dir: str, threshold: float = EMB_COS_THRESHOLD,
-    sample_n: int = RECALL_SAMPLE_N,
-) -> DataFrame:
-    """The ``bits`` dial's A/B regression corpus (r13 staged; VERDICT
-    r12 next #6): one row per dial setting — the adaptive corpus-sized
-    form beside the pinned settings in ``BITS_DIAL_FIXED`` — reporting
-    candidate volume and sample pair recall SIDE BY SIDE on the same
-    corpus. This is the measured decision table behind the dial:
-    under-sized bits show the quadratic candidate blow-up
-    (SCALEUP_STAGED_r9 measured 36x wall at fixed 8 bits under 10x
-    corpus), over-sized bits show the recall fade, and the adaptive row
-    should sit at the knee. Candidate counts are probe-scheme-invariant
-    (each unordered pair is a candidate exactly once on every path —
-    see neardup_scored_candidates), so the A/B isolates the DIAL.
-
-    Columns: variant, bits, n_candidates (pre-verify unordered pairs),
-    n_pairs (>= threshold), n_sample_truth (exact cosine pairs touching
-    the deterministic vec_id < sample_n probe sample), n_sample_hit,
-    recall_micro (hit*1e6 div truth, NULL when no true pair).
-
-    Scale posture: the exact truth side is sample x corpus (sample
-    broadcasts — linear, never all-pairs); each variant is one probed
-    equi-join pipeline aggregated to one row. The under-sized FIXED
-    variants are deliberately quadratic-per-bucket at scale — that cost
-    cliff is the fact this diagnostic exists to surface; run it at
-    fixture scale, not on the full corpus (the adaptive production
-    paths never pay it).
-    """
-    e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
-    )
-    s = e0.where(F.col("vec_id") < sample_n).select(
-        F.col("vec_id").alias("s_id"), F.col("embedding").alias("s_emb"),
-        F.col("n_fix").alias("na_fix"),
-    )
-    # pair-grain dots via dot_fix_arrow (bit-identical numpy twin) —
-    # same wall and same fix as neardup_lsh_recall_report (r14)
-    truth = (
-        e0.crossJoin(F.broadcast(s))
-        .where(F.col("vec_id") != F.col("s_id"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("s_emb"), F.col("embedding")))
-        .where(
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("n_fix"))
-            >= F.lit(threshold)
-        )
-        .select(
-            F.least("s_id", "vec_id").alias("vec_a"),
-            F.greatest("s_id", "vec_id").alias("vec_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    t_agg = truth.agg(F.count(F.lit(1)).cast("long").alias("n_sample_truth"))
-    nb = e0.agg(
-        F.least(
-            F.lit(MAX_SIGN_BITS),
-            F.greatest(
-                F.lit(MIN_SIGN_BITS),
-                F.length(
-                    F.bin(
-                        F.expr(
-                            f"greatest(count(1) div {SIGN_TARGET_OCCUPANCY}, 1)"
-                        )
-                    )
-                ),
-            ),
-        )
-        .cast("int")
-        .alias("bits")
-    )
-
-    def variant_row(label: str, bits: int | None) -> DataFrame:
-        cand = neardup_scored_candidates(e0, 1, bits)
-        agg = cand.agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidates"),
-            F.coalesce(
-                F.sum((F.col("score") >= F.lit(threshold)).cast("long")),
-                F.lit(0),
-            ).cast("long").alias("n_pairs"),
-        )
-        hit = (
-            cand.where(F.col("score") >= F.lit(threshold))
-            .where((F.col("vec_a") < sample_n) | (F.col("vec_b") < sample_n))
-            .join(truth, ["vec_a", "vec_b"], "left_semi")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_sample_hit"))
-        )
-        r = agg.crossJoin(F.broadcast(hit)).crossJoin(F.broadcast(t_agg))
-        if bits is None:
-            r = r.crossJoin(F.broadcast(nb))
-            bits_col = F.col("bits")
-        else:
-            bits_col = F.lit(bits).cast("int")
-        return r.select(
-            F.lit(label).alias("variant"),
-            bits_col.alias("bits"),
-            "n_candidates",
-            "n_pairs",
-            "n_sample_truth",
-            "n_sample_hit",
-            F.expr(
-                "CASE WHEN n_sample_truth > 0"
-                " THEN n_sample_hit * 1000000L div n_sample_truth END"
-            ).alias("recall_micro"),
-        )
-
-    out = variant_row("adaptive", None)
-    for k in BITS_DIAL_FIXED:
-        out = out.unionByName(variant_row(f"fixed_{k:02d}", k))
-    return out
-
-
-def density_minpts_sweep(
-    spark: SparkSession, sf_dir: str, tau: float = DENSITY_TAU,
-) -> DataFrame:
-    """Outlier-count-vs-``min_pts`` curve over the density labels (r13
-    staged) — the dial table a curation owner reads to PICK the
-    DBSCAN-style core-point floor (too low keeps garbage, too high
-    flags the long tail of legitimate rarities): for each candidate
-    floor in ``DENSITY_MINPTS_GRID``, how many vectors would be flagged
-    and what corpus share that is. Completes the dial trio beside the
-    ``bits`` A/B (lsh_bits_dial_report) and the SemDeDup tau sweep.
-
-    Scale posture: ONE density pass (the probed LSH neighbor count —
-    never all-pairs) feeding a grid explode of |grid| rows per vector
-    and a |grid|-row hash agg; exact BIGINT counts, one truncating
-    division per row.
-    """
-    base = lsh_density_outliers(spark, sf_dir, tau).select(
-        "vec_id", "n_neighbors"
-    )
-    tot = base.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    grid = F.array(*[F.lit(m) for m in DENSITY_MINPTS_GRID])
-    return (
-        base.select(
-            F.explode(grid).alias("min_pts"), "n_neighbors"
-        )
-        .groupBy("min_pts")
-        .agg(
-            F.coalesce(
-                F.sum((F.col("n_neighbors") < F.col("min_pts")).cast("long")),
-                F.lit(0),
-            ).cast("long").alias("n_outliers")
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("min_pts").cast("int").alias("min_pts"),
-            "n_outliers",
-            "n_total",
-            F.expr(
-                "CASE WHEN n_total > 0"
-                " THEN n_outliers * 1000000L div n_total END"
-            ).alias("outlier_share_micro"),
-        )
     )

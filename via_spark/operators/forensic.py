@@ -333,7 +333,7 @@ def clusters_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 HYBRID_CUT_N = 100
 
@@ -476,7 +476,7 @@ def clusters_windowed_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     On a healthy store the result is IDENTICAL to
     forensic_clusters_windowed (the shared oracle proves it); the
-    planted-corruption test (tests/test_staging.py) proves the skip:
+    planted-corruption test (tests/test_operator_models.py) proves the skip:
     corrupt one day file -> this query returns the surviving days,
     the strict one throws.
 

@@ -731,7 +731,7 @@ def store_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds is the first sign of a dial stepping or a skewed corpus.
     Wall-clock and iteration counts are intentionally NOT here: they
     are nondeterministic, so they live in the probe artifacts
-    (SCALEUP_STORES*.json), keeping this query fully oracle-checkable.
+    (history/SCALEUP_STORES*.json), keeping this query fully oracle-checkable.
 
     Columns: store, input_rows, label_rows, n_groups (distinct
     cluster/rep), flagged_rows (non-root members / is_dup marks),
@@ -841,7 +841,7 @@ def simhash_graph_triangles(
 
     The sf0.01 fixture's simhash graph is triangle-free (max degree
     2), so the oracle row there is a degenerate (…, 0, 0) census — the
-    planted test (tests/test_staging.py) carries the triangle and gcc
+    planted test (tests/test_operator_models.py) carries the triangle and gcc
     semantics on a known graph.
     """
     from via_spark.operators.dedup import dedup_simhash_pairs

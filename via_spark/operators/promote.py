@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import rhythm
 from via_spark import store
 
@@ -47,6 +48,21 @@ ENTITY_TYPE = "event_cluster"
 def event_date(ts_sec: Column) -> Column:
     """Epoch-seconds → date via integer day arithmetic (timezone-proof)."""
     return F.date_add(F.lit("1970-01-01").cast("date"), (ts_sec / 86400).cast("int"))
+
+
+def tier1_rows(flat: DataFrame) -> DataFrame:
+    """Flattened (service, severity, body, ts) rows → tier1 rows: the
+    one tier1 derivation shared by the streaming ingest and the API.
+
+    ``event_id`` is a content-derived surrogate (the OTel envelope has
+    no row id): deterministic across replays, used only as a tiebreak.
+    """
+    return (
+        flat.withColumn("event_id", F.abs(F.xxhash64("service", "severity", "body", "ts")))
+        .withColumn("template", template(F.col("body")))
+        .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
+        .withColumn("event_date", event_date(F.col("ts")))
+    )
 
 
 def _serialize_log(df: DataFrame) -> Column:

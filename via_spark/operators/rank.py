@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from via_spark.operators.sketch import _hash48
 from via_spark.session import load_table
 
 _PID_SHIFT = 33
@@ -562,19 +563,7 @@ def zorder_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"((day - min_day) * {2**Z_BITS}) div (max_day - min_day + 1)"
             ).cast("int"),
         )
-        .withColumn(
-            # the repo-wide 48-bit sha256-prefix hash idiom (see
-            # operators/sketch._hash48) inlined: importing it here
-            # would graft sketch.py onto every rank-closure query's
-            # rotation footprint for a one-line expression
-            "qu",
-            (
-                F.conv(
-                    F.substring(F.sha2(F.col("uid"), 256), 1, 12), 16, 10
-                ).cast("long")
-                % levels
-            ).cast("int"),
-        )
+        .withColumn("qu", (_hash48(F.col("uid")) % levels).cast("int"))
     )
     z = q.withColumn("z", _interleave(F.col("qd"), F.col("qu")))
     # Both layouts from ONE pass: each row explodes into its two

@@ -287,7 +287,7 @@ def chunk_bm25_topk(
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 OVERLAP_CUTS = (5, 10, 20, 50)
 

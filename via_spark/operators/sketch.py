@@ -338,10 +338,8 @@ def _rank_quantile(
 ) -> DataFrame:
     """Rank-based discrete quantile per group over a ``vfix`` column:
     min v with p_den·|{x ≤ v}| ≥ p_num·n — the same all-integer
-    definition as stats.p95_rank_threshold (local copy so the sketch
-    module never grafts itself onto the stats rotation closure); the
-    cumulative window runs over the per-(group, value) histogram,
-    never the row stream."""
+    definition as stats.p95_rank_threshold; the cumulative window runs
+    over the per-(group, value) histogram, never the row stream."""
     hist = df.groupBy(group, "vfix").agg(F.count(F.lit(1)).alias("c"))
     wcum = (
         Window.partitionBy(group)

@@ -767,8 +767,7 @@ def ship_lag_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging
-# until the r10 head splice; each has an oracle + parity test already) ---
+# --- round-10 additions ---
 
 # Benford first-digit probabilities log10(1 + 1/d), d = 1..9, in 1e-6
 # micro units. The nine integers sum to exactly 1_000_000 and are PINNED
@@ -843,7 +842,7 @@ def quartiles_over(
     well-defined under ties, no interpolation, no float ordering. Returns
     one row per key: (key, n, q1_fix, q3_fix).
 
-    Property-tested against a pure-Python model in tests/test_staging.py.
+    Property-tested against a pure-Python model in tests/test_operator_models.py.
 
     Scale posture: one window pass per key (row_number + count over the
     same partitioning — one sort), then a per-key hash agg over the ≤2

@@ -1095,7 +1095,7 @@ def bigram_lm_over(d: DataFrame) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 
 def spearman_length_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,7 +1182,7 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str, k: int = RAKE_TOP_K) -> Da
 
 def rake_over(d: DataFrame, k: int = RAKE_TOP_K) -> DataFrame:
     """Core RAKE over ANY (doc_id, text) frame — planted-fixture tested
-    (island boundaries, degree/freq scores) in tests/test_staging.py."""
+    (island boundaries, degree/freq scores) in tests/test_operator_models.py."""
     from pyspark.sql import Window
 
     pos = d.select(
@@ -1250,7 +1250,7 @@ def gini_token_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gini_over(d: DataFrame) -> DataFrame:
     """Core Gini over ANY (source, doc_id, x) frame — property-tested
-    against a pure-Python model in tests/test_staging.py."""
+    against a pure-Python model in tests/test_operator_models.py."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("source").orderBy(F.col("x").asc(), F.col("doc_id").asc())

@@ -1310,8 +1310,7 @@ def holt_over(daily: DataFrame) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging
-# until the r10 head splice) ---
+# --- round-10 additions ---
 
 
 def ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,7 +1423,7 @@ def acf_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def acf_over(dense: DataFrame) -> DataFrame:
     """Core ACF over ANY dense (event_type, day, cnt) frame —
-    property-tested against a pure-Python model in tests/test_staging.py."""
+    property-tested against a pure-Python model in tests/test_operator_models.py."""
     series = (
         dense.groupBy("event_type")
         .agg(F.array_sort(F.collect_list(F.struct("day", "cnt"))).alias("seq"))
@@ -1494,7 +1493,7 @@ def stl_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stl_over(dense: DataFrame) -> DataFrame:
     """Core decomposition over ANY dense (event_type, day, cnt) frame —
-    property-tested against a pure-Python model in tests/test_staging.py."""
+    property-tested against a pure-Python model in tests/test_operator_models.py."""
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -1594,7 +1593,7 @@ def markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def markov_over(base: DataFrame) -> DataFrame:
     """Core Markov holdout eval over ANY (user_id, event_id, event_type,
-    sec) frame — planted-sequence tested in tests/test_staging.py."""
+    sec) frame — planted-sequence tested in tests/test_operator_models.py."""
     bounds = base.agg(F.expr("(min(sec) + max(sec) + 1) div 2").alias("split_sec"))
     w = Window.partitionBy("user_id").orderBy(F.col("sec").asc(), F.col("event_id").asc())
     trans = (

@@ -36,11 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from via_spark.functions.simhash import (  # noqa: F401 — simhash_hex_sql stays the native spec
-    simhash_hex,
-    simhash_hex_arrow,
-    simhash_hex_sql,
-)
+from via_spark.functions.simhash import simhash_hex_arrow
 from via_spark.functions.text import tokens
 from via_spark.session import load_table, spread
 
@@ -317,8 +313,7 @@ def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical hex (integer-only logic, parity test + every
     # consumer's oracle), replacing the interpreted 64-bit-vote HOF
     # that was the ~40 s cold wall of the Hamming family at the 100×
-    # dial (guide §4.2). simhash_hex_sql remains the native spec for
-    # low-volume callers.
+    # dial (guide §4.2). simhash_hex remains the native reference.
     return toks.select(
         "doc_id", simhash_hex_arrow(F.col("toks")).alias("simhash")
     )
@@ -1340,7 +1335,7 @@ def semdedup_cell_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 # 1/log2(i+1) in 1e-6 micro units for ranks 1..10 — the nDCG discount
 # table as PINNED integers (no transcendental log at query time; the
@@ -1523,79 +1518,5 @@ def semantic_contamination(
             "bench_id",
             F.col("cos").alias("best_cos"),
             (F.col("cos") >= F.lit(tau)).alias("contaminated"),
-        )
-    )
-
-
-# --- round-13 staged additions (per-dial regression corpus) ---
-
-SEMDEDUP_TAU_GRID = (10, 20, 30, 40, 50, 60)  # percent taus swept
-
-
-def semdedup_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dup-count-vs-``tau`` curve over the SemDeDup store (r13 staged)
-    — the dial table behind SEMDEDUP_TAU: for each candidate cosine
-    floor (percent grid), how many vectors would be marked semantic
-    duplicates under the SAME cell confinement the production store
-    uses. The tau_pct = 30 row must equal the store's flagged count
-    (store_build_report semdedup flagged_rows) — pinned by test, so the
-    sweep and the store cannot drift apart. Completes the dial trio
-    beside lsh_bits_dial_report (bits) and density_minpts_sweep
-    (min_pts).
-
-    Scale posture: rides the persisted label store (the k-means
-    fixpoint ran once); the pair scan is confined to equal ``cluster``
-    ids — the (bkt, cid, scid) sub-cells, never all-pairs — scored
-    ONCE, with the |grid| thresholds applied as a grid explode over the
-    bounded scored set. Exact: fixed-point dots, tau compared at
-    tau_pct/100.0 (int->double conversion + one division, correctly
-    rounded identically in both engines).
-    """
-    labels = semdedup_assignments(spark, sf_dir).select("vec_id", "cluster")
-    e = spread(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ).withColumn(
-        "n_fix", dot_fix(F.col("embedding"), F.col("embedding"))
-    )
-    x = e.join(labels, "vec_id")
-    a = x.select(
-        "cluster", F.col("vec_id").alias("va"),
-        F.col("embedding").alias("emb_a"), F.col("n_fix").alias("na_fix"),
-    )
-    b = x.select(
-        "cluster", F.col("vec_id").alias("vb"),
-        F.col("embedding").alias("emb_b"), F.col("n_fix").alias("nb_fix"),
-    )
-    scored = (
-        a.join(b, "cluster")
-        .where(F.col("va") < F.col("vb"))
-        .repartition(F.col("va"), F.col("vb"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("emb_a"), F.col("emb_b")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-        )
-        .select("vb", "score")
-    )
-    grid_arr = F.array(*[F.lit(t) for t in SEMDEDUP_TAU_GRID])
-    grid = spark.range(1).select(F.explode(grid_arr).alias("tau_pct"))
-    dups = (
-        scored.select(F.explode(grid_arr).alias("tau_pct"), "vb", "score")
-        .where(F.col("score") >= F.col("tau_pct").cast("double") / F.lit(100.0))
-        .groupBy("tau_pct")
-        .agg(F.countDistinct("vb").cast("long").alias("n_dups"))
-    )
-    tot = e.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return (
-        grid.join(dups, "tau_pct", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("tau_pct").cast("int").alias("tau_pct"),
-            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-            "n_total",
-            F.expr(
-                "CASE WHEN n_total > 0"
-                " THEN coalesce(n_dups, 0L) * 1000000L div n_total END"
-            ).alias("dup_share_micro"),
         )
     )

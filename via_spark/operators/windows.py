@@ -274,7 +274,7 @@ def interval_overlap_over(sess: DataFrame, hot: DataFrame) -> DataFrame:
     )
 
 
-# --- round-10 staged additions (registered through via_spark.staging) ---
+# --- round-10 additions ---
 
 SURVIVAL_LADDER = (0, 60, 300, 900, 1800, 3600, 7200, 14400)
 

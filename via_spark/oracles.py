@@ -7006,7 +7006,7 @@ WHERE NOT EXISTS (
 """
 
 
-# --- round-10 staged oracles (wired in via_spark.staging) ---
+# --- round-10 oracles ---
 
 
 def benford_digit_audit_sql() -> str:
@@ -8137,7 +8137,7 @@ FROM shares s CROSS JOIN hhi h
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged additions (registered through via_spark.staging)
+# Round-10 additions
 # ---------------------------------------------------------------------------
 
 
@@ -8216,7 +8216,7 @@ def clusters_windowed_tolerant_sql() -> str:
     """Mirrors forensic.clusters_windowed_tolerant: on a HEALTHY store
     the tolerant read is value-identical to the strict windowed scan,
     so the oracle is shared — the skip semantics under a corrupt day
-    partition are proven by the planted test (tests/test_staging.py),
+    partition are proven by the planted test (tests/test_operator_models.py),
     which DuckDB cannot express."""
     return forensic_clusters_windowed_sql()
 
@@ -8784,172 +8784,4 @@ SELECT source, CAST(pos AS INT) AS pos, n_p AS n_docs, n_distinct,
        CAST(floor(ln(CAST(n_p AS DOUBLE)) * 1000000) AS BIGINT)
        - clc_sum // n_p AS entropy_micro
 FROM per_pos
-"""
-
-
-# --- round-13 staged oracles (per-dial regression corpus) ---
-
-
-def lsh_bits_dial_report_sql(
-    threshold: float = 0.4, sample_n: int = 200,
-) -> str:
-    """Mirrors dedup.lsh_bits_dial_report — per dial setting (adaptive
-    + the pinned BITS_DIAL_FIXED values), candidate volume and sample
-    pair recall on the same corpus. Candidate sets are enumerated with
-    the full Hamming-1 neighborhood + vec_a < vec_b (the engine's
-    directional probing yields the identical unordered set — each pair
-    is a candidate exactly once on both constructions)."""
-    from via_spark.operators.dedup import BITS_DIAL_FIXED
-
-    truth = f"""
-truth AS (
-  SELECT DISTINCT least(s.vec_id, e.vec_id) AS vec_a,
-         greatest(s.vec_id, e.vec_id) AS vec_b
-  FROM embeddings e JOIN embeddings s ON s.vec_id < {sample_n}
-   AND e.vec_id <> s.vec_id
-  WHERE {_COS.format(
-      d=_DOT9.format(a="s.embedding", b="e.embedding"),
-      na=_DOT9.format(a="s.embedding", b="s.embedding"),
-      nb=_DOT9.format(a="e.embedding", b="e.embedding"),
-  )} >= {threshold!r}
-),
-tn AS (SELECT count(*)::BIGINT AS n_sample_truth FROM truth)"""
-
-    def variant(label: str, bits: int | None) -> str:
-        tag = label.replace("_", "")
-        if bits is None:
-            probes = _VARIABLE_PROBES_SQL
-            ecte = "e"
-            bits_expr = "(SELECT bits FROM nb)"
-        else:
-            plist = ", ".join(
-                ["bucket"] + [_flip_bit_sql("bucket", i) for i in range(bits)]
-            )
-            probes = f"[{plist}]"
-            ecte = f"e_{tag}"
-            bits_expr = str(bits)
-        scored = f"""
-sc_{tag} AS (
-  SELECT ap.vec_a, b.vec_id AS vec_b,
-         {_COS.format(
-             d=_DOT9.format(a="ap.emb_a", b="b.embedding"),
-             na=_DOT9.format(a="ap.emb_a", b="ap.emb_a"),
-             nb=_DOT9.format(a="b.embedding", b="b.embedding"),
-         )} AS score
-  FROM (SELECT vec_id AS vec_a, embedding AS emb_a,
-               unnest({probes}) AS pbucket FROM {ecte}) ap
-  JOIN {ecte} b ON ap.pbucket = b.bucket AND ap.vec_a < b.vec_id
-),
-agg_{tag} AS (
-  SELECT count(*)::BIGINT AS n_candidates,
-         COALESCE(sum(CASE WHEN score >= {threshold!r} THEN 1 ELSE 0 END),
-                  0)::BIGINT AS n_pairs
-  FROM sc_{tag}
-),
-hit_{tag} AS (
-  SELECT count(*)::BIGINT AS n_sample_hit
-  FROM sc_{tag} s JOIN truth t
-    ON s.vec_a = t.vec_a AND s.vec_b = t.vec_b
-  WHERE s.score >= {threshold!r}
-    AND (s.vec_a < {sample_n} OR s.vec_b < {sample_n})
-)"""
-        row = f"""
-SELECT '{label}' AS variant, {bits_expr}::INT AS bits,
-       n_candidates, n_pairs, n_sample_truth, n_sample_hit,
-       (CASE WHEN n_sample_truth > 0
-             THEN n_sample_hit * 1000000 // n_sample_truth END)::BIGINT
-         AS recall_micro
-FROM agg_{tag}, hit_{tag}, tn"""
-        ecte_def = (
-            ""
-            if bits is None
-            else f""",
-{ecte} AS (
-  SELECT vec_id, embedding, {_sign_bucket_sql(0, bits)} AS bucket
-  FROM embeddings
-)"""
-        )
-        return ecte_def, scored, row
-
-    parts_cte, parts_row = [], []
-    for label, bits in [("adaptive", None)] + [
-        (f"fixed_{k:02d}", k) for k in BITS_DIAL_FIXED
-    ]:
-        ecte_def, scored, row = variant(label, bits)
-        parts_cte.append(ecte_def + "," + scored)
-        parts_row.append(row)
-    return (
-        f"WITH {_adaptive_sign_ctes()},{truth}"
-        + "".join(parts_cte)
-        + "\n"
-        + "\nUNION ALL\n".join(parts_row)
-    )
-
-
-def density_minpts_sweep_sql(tau: float = 0.2) -> str:
-    """Mirrors dedup.density_minpts_sweep — outlier counts per
-    candidate min_pts floor over ONE density pass (the registered
-    lsh_density_outliers chain reused as a CTE body)."""
-    from via_spark.operators.dedup import DENSITY_MINPTS_GRID
-
-    grid = ", ".join(str(m) for m in DENSITY_MINPTS_GRID)
-    return f"""
-WITH dens AS (
-  SELECT vec_id, n_neighbors FROM ({lsh_density_outliers_sql(tau)})
-),
-tot AS (SELECT count(*)::BIGINT AS n_total FROM dens),
-grid AS (SELECT unnest([{grid}]) AS min_pts)
-SELECT g.min_pts::INT AS min_pts,
-       COALESCE(sum(CASE WHEN d.n_neighbors < g.min_pts THEN 1 ELSE 0 END),
-                0)::BIGINT AS n_outliers,
-       (SELECT n_total FROM tot) AS n_total,
-       (CASE WHEN (SELECT n_total FROM tot) > 0
-             THEN COALESCE(sum(CASE WHEN d.n_neighbors < g.min_pts
-                                    THEN 1 ELSE 0 END), 0)
-                  * 1000000 // (SELECT n_total FROM tot) END)::BIGINT
-         AS outlier_share_micro
-FROM grid g CROSS JOIN dens d
-GROUP BY g.min_pts
-"""
-
-
-def semdedup_tau_sweep_sql() -> str:
-    """Mirrors vector.semdedup_tau_sweep — within-cluster (sub-cell)
-    pair scores from the SemDeDup assignment chain, swept over the
-    percent tau grid; the tau_pct = 30 row equals the store's flagged
-    count by construction."""
-    from via_spark.operators.vector import SEMDEDUP_TAU_GRID
-
-    grid = ", ".join(str(t) for t in SEMDEDUP_TAU_GRID)
-    return f"""
-WITH sd AS (
-  SELECT vec_id, cluster FROM ({semdedup_assignments_sql()})
-),
-x AS (
-  SELECT e.vec_id, e.embedding, sd.cluster
-  FROM embeddings e JOIN sd USING (vec_id)
-),
-scored AS (
-  SELECT b.vec_id AS vb,
-         {_COS.format(
-             d=_DOT9.format(a="a.embedding", b="b.embedding"),
-             na=_DOT9.format(a="a.embedding", b="a.embedding"),
-             nb=_DOT9.format(a="b.embedding", b="b.embedding"),
-         )} AS score
-  FROM x a JOIN x b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-),
-tot AS (SELECT count(*)::BIGINT AS n_total FROM embeddings),
-grid AS (SELECT unnest([{grid}]) AS tau_pct),
-dups AS (
-  SELECT g.tau_pct, count(DISTINCT s.vb) AS n_dups
-  FROM grid g LEFT JOIN scored s ON s.score >= g.tau_pct / 100.0
-  GROUP BY g.tau_pct
-)
-SELECT d.tau_pct::INT AS tau_pct,
-       COALESCE(d.n_dups, 0)::BIGINT AS n_dups,
-       (SELECT n_total FROM tot) AS n_total,
-       (CASE WHEN (SELECT n_total FROM tot) > 0
-             THEN COALESCE(d.n_dups, 0) * 1000000 // (SELECT n_total FROM tot)
-             END)::BIGINT AS dup_share_micro
-FROM dups d
 """

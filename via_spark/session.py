@@ -43,14 +43,14 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # coalescePartitions.parallelismFirst stays at Spark's default
-    # (true). r15 A/B'd false (advisory-size coalescing, the
-    # production-docs suggestion): it cuts the small-shuffle stage
-    # latency that dominates the 1–2 s query class at 32 cores
-    # (source_overlap variant probe 1.91→1.16 s with 8 reduce
-    # partitions) but SERIALIZES post-shuffle CPU-heavy verify stages
-    # (containment_dedup_pairs ×2.11 paired — its candidate-pair
-    # array_intersect coalesced onto one task). Net negative at this
-    # grain; see BENCH_AB_r15/aqe_parfirst.json.
+    # (true). Setting it false (advisory-size coalescing, the
+    # production-docs suggestion) was measured in a paired A/B at 32
+    # cores and rejected: it cuts the small-shuffle stage latency that
+    # dominates the 1–2 s query class (source_overlap variant probe
+    # 1.91→1.16 s with 8 reduce partitions) but SERIALIZES post-shuffle
+    # CPU-heavy verify stages (containment_dedup_pairs ×2.11 paired —
+    # its candidate-pair array_intersect coalesced onto one task). Net
+    # negative at this grain (pairs: history/BENCH_AB_r15/aqe_parfirst.json).
     # Let AQE rewrite a sort-merge join to a shuffled-hash join when
     # every post-shuffle partition's build side fits comfortably in a
     # task (guide §3.1 — default 0 disables the rewrite). Decided at
@@ -58,12 +58,8 @@ _RUNTIME_CONFS = {
     # it is scale-adaptive: big-data joins with large partitions keep
     # sort-merge; the narrow keyed self-joins of the dedup family
     # (20-triple Hamming probes, band keys) skip two O(n log n) sorts.
-    # Env-overridable (r15) so the blast radius is auditable by a
-    # config-only paired A/B (VERDICT r14 #2) and tunable per
-    # deployment without a code change.
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_THRESHOLD", "64m"
-    ),
+    # Paired A/B of 64m vs 0 (rewrite off): history/BENCH_AB_r15/shj_config*.json.
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
 }
 
 

@@ -107,7 +107,7 @@ def prewarm(spark: SparkSession, sf_dir: str) -> None:
     Submitting them from a thread pool overlaps those gaps (guide
     §2.6: actions are only sequential because driver code calls them
     sequentially) — measured 10.4 s → ~4 s cold for the four-store
-    census (OPTIMIZATION_r14.md). Store consumers that need several
+    census (history/OPTIMIZATION_r14.md). Store consumers that need several
     stores call this first; single-store consumers skip it.
     """
     if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":

@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import promote
 from via_spark.operators.schema_infer import otel_flatten
 
@@ -120,22 +119,13 @@ def _store_has_data(spark: SparkSession, path: str) -> bool:
 
 def read_otel_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """S1 streaming flavor: OTel-JSONL files → flattened tier1 columns.
-
-    ``event_id`` is a content-derived surrogate (the OTel envelope has
-    no row id): deterministic across replays, used only as a tiebreak.
-    """
+    """S1 streaming flavor: OTel-JSONL files → flattened tier1 columns
+    (``promote.tier1_rows``, the same derivation as the API ingest)."""
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.load(input_dir)
-    flat = otel_flatten(raw, raw_col="value")
-    return (
-        flat.withColumn("event_id", F.abs(F.xxhash64("service", "severity", "body", "ts")))
-        .withColumn("template", template(F.col("body")))
-        .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
-        .withColumn("event_date", promote.event_date(F.col("ts")))
-    )
+    return promote.tier1_rows(otel_flatten(raw, raw_col="value"))
 
 
 def start_tier1_ingest(stream: DataFrame, tier1_path: str, checkpoint: str,
@@ -219,10 +209,10 @@ def start_detection(
     analysis WINDOW (``window_sec``): processing-time triggers fire on
     wall-clock phase, so worst-case detection latency is a full trigger
     interval + compute — a 60 s trigger can take ~60 s to SEE an event
-    planted right after a fire (measured: SOAK_r9 59.5 s, compute only
-    ~2 s). Running the same 60 s-window analysis on a shorter trigger
-    bounds latency by ``trigger_sec`` + compute with identical
-    detection semantics (the reference's ``app/worker.py:13`` sleep(60)
+    planted right after a fire (measured: history/SOAK_r9.json 59.5 s,
+    compute only ~2 s). Running the same 60 s-window analysis on a
+    shorter trigger bounds latency by ``trigger_sec`` + compute with
+    identical detection semantics (the reference's ``app/worker.py:13`` sleep(60)
     loop is an operating point, not a floor). Default ``None`` keeps
     the reference cadence (ANALYSIS_TRIGGER).
 
@@ -868,10 +858,10 @@ def merge_kmv_partials(
     from pyspark.sql import Window
 
     incoming = batch_df.select("day", "uh").distinct()
-    try:
+    if _store_has_data(spark, store_path):
         existing = spark.read.parquet(store_path).select("day", "uh")
         merged = existing.unionByName(incoming).distinct()
-    except Exception:  # first batch: store not yet created
+    else:  # first batch: store not yet created
         merged = incoming
     w = Window.partitionBy("day").orderBy(F.col("uh").asc())
     cut = (
@@ -982,10 +972,10 @@ def merge_bloom_partials(
     store (tiny by construction, no read/overwrite race).
     """
     incoming = batch_df.select("pos").distinct()
-    try:
+    if _store_has_data(spark, store_path):
         existing = spark.read.parquet(store_path).select("pos")
         merged = existing.unionByName(incoming).distinct()
-    except Exception:  # first batch: store not yet created
+    else:  # first batch: store not yet created
         merged = incoming
     rows = merged.collect()
     spark.createDataFrame(rows, "pos long").coalesce(1).write.mode(
@@ -1130,10 +1120,10 @@ def merge_sample_partials(
         .where(F.col("_rn") <= m)
         .drop("_rn")
     )
-    try:
+    if _store_has_data(spark, store_path):
         existing = spark.read.parquet(store_path).select("grp", "sk", "tie", "vfix")
         merged = existing.unionByName(incoming).distinct()
-    except Exception:  # first batch: store not yet created
+    else:  # first batch: store not yet created
         merged = incoming
     cut = (
         merged.withColumn("_rn", F.row_number().over(w))
@@ -1203,14 +1193,14 @@ def merge_hll_partials(
     State is O(2^p · days) regardless of cardinality.
     """
     incoming = batch_df.groupBy("day", "reg").agg(F.max("rank").alias("m_rank"))
-    try:
+    if _store_has_data(spark, store_path):
         existing = spark.read.parquet(store_path)
         merged = (
             existing.unionByName(incoming)
             .groupBy("day", "reg")
             .agg(F.max("m_rank").alias("m_rank"))
         )
-    except Exception:  # first batch: store not yet created
+    else:  # first batch: store not yet created
         merged = incoming
     # ≤ 2^p · days rows — collect-and-rewrite stays tiny and avoids
     # read/overwrite races on the same parquet path
