@@ -16,7 +16,8 @@ Set ``SPARK_GRAFT_BENCH_REPS=N`` (default 1) to time each query N times
 and report the per-query MEDIAN — single runs at fixture scale are
 noisy at the multi-second level (Python-worker startup for mapInPandas
 stages, box load); round-4's "regressions" moved 3× with zero code
-change. BENCH_FULL.json then also carries the raw samples per query.
+change. The full per-query detail goes to ``.bench_out/BENCH_FULL*.json``
+(gitignored), which then also carries the raw samples per query.
 """
 
 from __future__ import annotations
@@ -171,7 +172,9 @@ def main() -> None:
         else f"BENCH_FULL_MEDIAN{reps}{tag}.json"
     )
     try:
-        (_REPO / full_name).write_text(json.dumps(full, indent=1))
+        out_dir = _REPO / ".bench_out"
+        out_dir.mkdir(exist_ok=True)
+        (out_dir / full_name).write_text(json.dumps(full, indent=1))
     except OSError:
         pass
 

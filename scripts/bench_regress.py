@@ -1,4 +1,5 @@
-"""Same-JVM per-query regression gate over BENCH_FULL_MEDIAN*.json.
+"""Same-JVM per-query regression gate over BENCH_FULL_MEDIAN*.json
+(``bench.py`` writes them to ``.bench_out/``).
 
 Cross-round single-run comparisons at fixture scale are noise
 (committed evidence: four idle-box median-of-3 runs on UNCHANGED code
@@ -25,19 +26,6 @@ reason — the 2.0 gate only fired at >2x, exactly the size of move it
 existed to catch.
 
 Exit 0 = no regressions; 1 = regressions listed on stdout (JSON).
-
-REQUIRED round-close usage (VERDICT r11 #4 — the within-round anchor
-comparison alone let a 1.85× CROSS-round move through unflagged,
-because the round's own start bench already contained the regression):
-run the gate TWICE and commit both outputs as BENCH_REGRESS_r{N}.json:
-
-    python scripts/bench_regress.py BENCH_FULL_MEDIAN5_r{N-1}_final.json \
-        BENCH_FULL_MEDIAN5_r{N}_final.json          # cross-round gate
-    python scripts/bench_regress.py BENCH_FULL_MEDIAN5_r{N}_start.json \
-        BENCH_FULL_MEDIAN5_r{N}_final.json          # within-round gate
-
-Every hit must be either fixed in-round or explicitly accepted with a
-reason in the commit message that lands the artifact.
 """
 
 from __future__ import annotations

@@ -382,3 +382,76 @@ def test_sql_catalog_facade(spark, sf_oracle):
     }
     assert got == expect and len(got) >= 4
     assert spark.sql("SELECT count(*) AS n FROM tier2").collect()[0]["n"] > 0
+
+
+def _tier2_rows(bodies: dict[str, str]) -> list[tuple]:
+    """One stored tier2 row per (hash, body), in promote.TIER2_SCHEMA."""
+    import datetime
+
+    day = datetime.date(2026, 1, 1)
+    return [
+        ("event_cluster", h, 100 + i, 200 + i, i + 1, "svc", "ERROR",
+         "novelty", "ctx", body, [], day)
+        for i, (h, body) in enumerate(sorted(bodies.items()))
+    ]
+
+
+def test_triage_matches_oracle_on_edge_marks(spark, tmp_path):
+    """tier2_triage is bit-identical to the DuckDB triage statement
+    (``oracles.triage_scored_sql``, the tail of forensic_triage_sql)
+    under explicit marks: a duplicate positive, an id that is both
+    positive and negative, an unknown id, an empty-body cluster (never
+    a candidate) and an all-cancelling query vector (all scores 0.0)."""
+    import duckdb
+
+    from via_spark import oracles
+    from via_spark.operators import promote
+
+    bodies = {
+        "h_a": "disk full on node",
+        "h_b": "disk full on node disk full on node",  # tf = 2 * h_a's
+        "h_c": "error disk timeout error",
+        "h_d": "network timeout on node",
+        "h_e": "",
+        "h_f": "user login ok",
+        "h_g": "disk error error error",
+        "h_h": "network timeout",
+    }
+    rows = _tier2_rows(bodies)
+    eng = VIAEngine(spark, str(tmp_path / "triage_store"))
+    promote.write_tier2(spark.createDataFrame(rows, promote.TIER2_SCHEMA), eng.tier2_path)
+
+    con = duckdb.connect()
+    con.execute(
+        'CREATE TABLE clusters (rhythm_hash VARCHAR, "count" BIGINT, service VARCHAR, '
+        "severity VARCHAR, anomaly_type VARCHAR, body VARCHAR)"
+    )
+    con.executemany(
+        "INSERT INTO clusters VALUES (?, ?, ?, ?, ?, ?)",
+        [(r[1], r[4], r[5], r[6], r[7], r[9]) for r in rows],
+    )
+
+    def oracle(pos, neg, limit=50):
+        marks = ", ".join(
+            f"('{h}', {str(p).lower()})"
+            for hs, p in ((pos, True), (neg, False)) for h in hs
+        )
+        return con.sql(
+            f"WITH marked AS (SELECT * FROM (VALUES {marks}) v(rhythm_hash, is_pos)),\n"
+            + oracles.triage_scored_sql(
+                len(pos), max(len(neg), 1), limit, "is_pos", "NOT is_pos"
+            )
+        ).fetchall()
+
+    pos, neg = ["h_a", "h_a", "h_c", "unknown"], ["h_c", "h_d"]
+    got = [tuple(r) for r in eng.tier2_triage(pos, neg).collect()]
+    assert got == oracle(pos, neg)
+    scores = {r[0]: r[-1] for r in got}
+    assert set(scores) == {"h_b", "h_f", "h_g", "h_h"}  # h_e: no tokens
+    assert scores["h_b"] > 0 > scores["h_h"]
+
+    pos, neg = ["h_a"], ["h_b"]  # q = 2·a − b = 0
+    got = [tuple(r) for r in eng.tier2_triage(pos, neg).collect()]
+    assert got == oracle(pos, neg)
+    assert [r[0] for r in got] == ["h_c", "h_d", "h_f", "h_g", "h_h"]
+    assert all(r[-1] == 0.0 for r in got)

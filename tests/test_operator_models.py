@@ -489,6 +489,7 @@ def test_tolerant_windowed_skips_corrupt_day(spark, sf_oracle, tmp_path):
     corrupt ONE day partition of a copied tier2 daily store — the
     strict read fails the whole scan, the tolerant read returns exactly
     the surviving days' rows."""
+    import datetime
     import shutil
 
     from py4j.protocol import Py4JJavaError
@@ -508,28 +509,33 @@ def test_tolerant_windowed_skips_corrupt_day(spark, sf_oracle, tmp_path):
     shutil.copytree(src, dst)
     days = sorted(p for p in dst.iterdir() if p.name.startswith("event_date="))
     assert len(days) >= 2, "fixture store must span multiple days"
-    victim = days[0]
-    healthy_days = {p.name for p in days[1:]}
-    for f in victim.glob("*.parquet"):
-        f.write_bytes(b"PAR1 this is not a parquet file")
 
     t1 = store.tier1(spark, sf_oracle)
     now = rhythm.current_now(t1)
     lo, hi = now - WINDOWED_LO_DAYS * 86400, now - WINDOWED_HI_DAYS * 86400
 
-    # strict read: the corrupt day fails the scan (footer read during
-    # schema inference raises through py4j; a post-inference corruption
-    # would surface as a CapturedException at collect)
+    # the corrupt day lies inside the window: tier2 reads pass a pinned
+    # schema, so a day the window prunes is never opened at all
+    epoch = datetime.date(1970, 1, 1)
+    first, last = (
+        f"event_date={epoch + datetime.timedelta(days=t // 86400)}" for t in (lo, hi)
+    )
+    in_window = [p for p in days if first <= p.name <= last]
+    assert len(in_window) >= 2, "window must span several stored days"
+    victim = in_window[0]
+    healthy_days = {p.name for p in days if p != victim}
+    for f in victim.glob("*.parquet"):
+        f.write_bytes(b"PAR1 this is not a parquet file")
+
+    # strict read: the corrupt day fails the scan at collect
     with pytest.raises((CapturedException, Py4JJavaError)):
         promote.read_tier2(spark, str(dst), start_ts=lo, end_ts=hi).collect()
 
     # tolerant read: only the surviving days' rows, none lost (the
     # operator's exact read shape: static schema so no footer inference,
     # per-read ignoreCorruptFiles skipping the corrupt day at scan time)
-    from via_spark.operators.forensic import TIER2_DAILY_SCHEMA
-
     got = (
-        spark.read.schema(TIER2_DAILY_SCHEMA)
+        spark.read.schema(promote.TIER2_SCHEMA)
         .option("ignoreCorruptFiles", "true")
         .parquet(str(dst))
         .where(F.col("start_ts").between(lo, hi))

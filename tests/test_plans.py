@@ -1173,3 +1173,38 @@ def test_semdedup_bucketed_chain_plan_shape(spark, sf_oracle):
     assert "BroadcastHashJoin" in p, p[:2000]
     # bounded candidate set rebalanced on pair identity before the dot
     assert re.search(r"hashpartitioning\(va#\d+L?, vb#\d+L?", p), p[:3000]
+
+
+def test_tier2_triage_scores_against_broadcast_query(spark, tmp_path):
+    """The API triage plan scores each candidate row against ONE
+    broadcast query row: no Exchange keyed on ``dim``, no ExistingRDD
+    scan (the marks are a JVM-side literal), and building the DataFrame
+    runs no Spark job (the tier2 read passes its pinned schema, so no
+    footer is read)."""
+    import datetime
+
+    from via_spark.api import VIAEngine
+    from via_spark.operators import promote
+
+    day = datetime.date(2026, 1, 1)
+    rows = [
+        ("event_cluster", h, 1, 2, 3, "svc", "ERROR", "novelty", "ctx", body, [], day)
+        for h, body in (("h1", "disk full"), ("h2", "disk timeout"), ("h3", "login ok"))
+    ]
+    eng = VIAEngine(spark, str(tmp_path / "store"))
+    promote.write_tier2(spark.createDataFrame(rows, promote.TIER2_SCHEMA), eng.tier2_path)
+
+    sc = spark.sparkContext
+    group = "test-triage-build"
+    sc.setJobGroup(group, "build tier2_triage")
+    try:
+        df = eng.tier2_triage(["h1", "h1"], ["h2"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    p = executed_plan(df)
+    assert not re.search(r"Exchange hashpartitioning\([^)]*\bdim\b", p), p
+    assert "ExistingRDD" not in p, p
+    assert "BroadcastNestedLoopJoin" in p, p
+    assert [r["cluster_id"] for r in df.collect()] == ["h3"]

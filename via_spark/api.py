@@ -217,17 +217,6 @@ class VIAEngine:
 
     # -- internals ------------------------------------------------------------
 
-    _TIER1_SCHEMA = (
-        "service string, severity string, body string, ts long, "
-        "event_id long, template string, rhythm_hash string, event_date date"
-    )
-    _TIER2_SCHEMA = (
-        "entity_type string, rhythm_hash string, start_ts long, end_ts long, "
-        "count long, service string, severity string, anomaly_type string, "
-        "anomaly_context string, body string, sample_logs array<string>, "
-        "event_date date"
-    )
-
     def _read_or_empty(self, path: str, schema: str) -> DataFrame:
         """Missing store → typed empty frame (a fresh engine answers
         every read endpoint with empty results, like the reference's
@@ -239,14 +228,14 @@ class VIAEngine:
 
         if not os.path.exists(path):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _tier1(self) -> DataFrame:
-        return self._read_or_empty(self.tier1_path, self._TIER1_SCHEMA)
+        return self._read_or_empty(self.tier1_path, promote.TIER1_SCHEMA)
 
     def _tier2(self, start_ts: int | None = None, end_ts: int | None = None) -> DataFrame:
         if not os.path.exists(self.tier2_path):
-            return self.spark.createDataFrame([], self._TIER2_SCHEMA)
+            return self.spark.createDataFrame([], promote.TIER2_SCHEMA)
         return promote.read_tier2(self.spark, self.tier2_path, start_ts, end_ts)
 
     def _rules(self) -> DataFrame:

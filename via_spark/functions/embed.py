@@ -6,11 +6,13 @@ Capability parity with the reference's dense embedding step
 ``app/core/config.py:27``, ``app/services/qdrant_service.py:22-26,123``):
 two implementations behind one interface (SURVEY.md §7.4 decision 5):
 
-* ``sparse_embedding_rows`` — the deterministic fallback used by tests
-  and oracles: a hashing-trick bag-of-tokens embedding. Each token maps
-  to dimension ``conv(sha256(token)[:3], 16, 10) % 384`` with weight =
-  term frequency. Exact integer weights ⇒ cosine math is
-  oracle-checkable bit-for-bit.
+* ``token_dim`` — the deterministic embedder of the forensic queries
+  (mirrored by their DuckDB oracles): a hashing-trick bag-of-tokens
+  embedding.
+  Each token maps to dimension ``conv(sha256(token)[:3], 16, 10) % 384``
+  with weight = term frequency. Exact integer weights ⇒ cosine math is
+  oracle-checkable bit-for-bit (``operators.forensic`` scores each row's
+  dims against a broadcast query vector).
 * ``dense_embedded`` / ``dense_embed_batches`` — the production path:
   an Arrow-batched ``mapInPandas`` stage hosting a pluggable encoder
   (``Callable[[list[str]], vectors]``). The batching shell is real and
@@ -18,11 +20,8 @@ two implementations behind one interface (SURVEY.md §7.4 decision 5):
   STUBBED (the container has no ONNX runtime) with a clearly-marked
   NotImplementedError, so swapping in the real model is a one-liner.
 
-Scale posture (100 TB): the fallback embedder is explode → groupBy —
-one shuffle keyed by (id, dim); scoring joins on ``dim`` only touch
-non-zero entries (sparse dot), so cost follows token count, not the
-384-dim dense width. The production path streams Arrow batches through
-Python workers with bounded memory.
+Scale posture (100 TB): the production path streams Arrow batches
+through Python workers with bounded memory.
 """
 
 from __future__ import annotations
@@ -31,8 +30,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from via_spark.functions.text import tokens
 
 EMBED_DIM = 384
 
@@ -43,22 +40,6 @@ def token_dim(t: Column, dim: int = EMBED_DIM) -> Column:
     return (F.conv(F.substring(F.sha2(t, 256), 1, 3), 16, 10).cast("int") % dim)
 
 
-def sparse_embedding_rows(df: DataFrame, id_cols: list[str], text_col: str,
-                          dim: int = EMBED_DIM) -> DataFrame:
-    """(ids…, text) → (ids…, dim, w) sparse embedding rows, w = tf."""
-    toks = df.select(*id_cols, F.explode(tokens(F.col(text_col))).alias("_t"))
-    return (
-        toks.withColumn("dim", token_dim(F.col("_t"), dim))
-        .groupBy(*id_cols, "dim")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-
-
-def sparse_norms(rows: DataFrame, id_cols: list[str]) -> DataFrame:
-    """Per-id squared L2 norm of the sparse vector (exact BIGINT)."""
-    return rows.groupBy(*id_cols).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-
-
 def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
     """Load the production encoder — import-guarded optional dependency.
 
@@ -66,7 +47,7 @@ def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
     ``app/services/qdrant_service.py:22-26``) is importable, this
     returns a real encoder loaded ONCE per Python worker. In containers
     without the runtime it raises NotImplementedError; the
-    deterministic ``sparse_embedding_rows`` path is the engine's
+    deterministic ``token_dim`` embedding is the engine's
     always-testable embedder and the Arrow batching shell is proven
     with an injected fake encoder either way.
     tests/test_vector.py::test_dense_embedded_production_model runs the
@@ -78,7 +59,7 @@ def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
         raise NotImplementedError(
             f"dense embedding ({model_name}) requires the fastembed/ONNX "
             "runtime, not present in this container; use "
-            "sparse_embedding_rows or inject an encoder into "
+            "token_dim or inject an encoder into "
             "dense_embedded()"
         ) from exc
     model = TextEmbedding(model_name)

@@ -25,20 +25,24 @@ bodies are embedded with the deterministic hashing-trick embedder
 (functions.embed) — so every query here is value-exact against its
 DuckDB oracle, including the vector scores.
 
-Scale posture (100 TB): embeddings are sparse rows joined on ``dim``
-(cost follows tokens, not dense width); grouping rides WindowGroupLimit;
-the recommend query vector aggregates a handful of example rows into a
-broadcast side. Nothing here collects to the driver.
+Scale posture (100 TB): every scored path builds ONE query row — the
+dense 384-dim BIGINT query vector and its squared norm, from the
+literal text (one-row relation) or from one global aggregate over the
+example rows (triage) — and broadcasts it; each candidate row is scored
+where it lies by folding its own token dims against it (no explode, no
+shuffle on ``(hash, dim)``, no join on ``dim``), so cost follows the
+candidates' tokens. The only shuffle left is the per-hash canonical
+dedup; the top-k cut is a heap. Nothing here collects to the driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from via_spark.functions.embed import sparse_embedding_rows, sparse_norms
+from via_spark.functions.embed import EMBED_DIM, token_dim
 from via_spark.functions.text import tokens
 from via_spark.operators import promote, rhythm
 
@@ -70,8 +74,8 @@ def _canonical_per_hash(c: DataFrame) -> DataFrame:
     (write_tier2 mode=append); the reference's ``search_groups`` /
     ``group_by=rhythm_hash`` dedups groups in every forensic path
     (``forensic_analysis_service.py:63-65``). Deduping BEFORE the
-    embedding step also keeps multi-run bodies from double-counting
-    into one hash's sparse vector."""
+    scoring step also keeps multi-run bodies from double-counting
+    into one hash's vector."""
     w = Window.partitionBy("rhythm_hash").orderBy(
         F.col("count").desc(), F.col("start_ts").asc(),
         # full tiebreak chain: two runs can tie on (count, start_ts) —
@@ -86,16 +90,64 @@ def _canonical_per_hash(c: DataFrame) -> DataFrame:
     )
 
 
-def _embedded(clusters: DataFrame) -> tuple[DataFrame, DataFrame]:
-    rows = sparse_embedding_rows(clusters, ["rhythm_hash"], "body")
-    return rows, sparse_norms(rows, ["rhythm_hash"])
+def _dims(text: Column) -> Column:
+    """Hashing-trick dimension of every token of ``text``, in token
+    order (a dim repeats once per occurrence: its tf)."""
+    return F.transform(tokens(text), lambda t: token_dim(t))
 
 
-def _query_vector(spark: SparkSession, text: str) -> DataFrame:
-    """(dim, qw) rows + 1-row squared norm for a literal query text."""
-    q = spark.createDataFrame([(text,)], "qtext string")
-    rows = sparse_embedding_rows(q, [], "qtext").select("dim", F.col("w").alias("qw"))
-    return rows
+def _query(rel: DataFrame) -> DataFrame:
+    """One-row query frame from a one-row ``rel`` whose ``_p`` holds
+    (d, c) pairs — dim ``d`` gains weight ``c``: ``_q`` is the dense
+    EMBED_DIM BIGINT weight vector, ``_qn2`` its squared norm."""
+    zero = F.lit(0).cast("long")
+    q = F.transform(
+        F.sequence(F.lit(0), F.lit(EMBED_DIM - 1)),
+        lambda i: F.aggregate(
+            F.col("_p"), zero,
+            lambda a, p: a + F.when(p["d"] == i, p["c"]).otherwise(zero),
+        ),
+    )
+    return rel.select(q.alias("_q")).select(
+        "_q", F.aggregate("_q", zero, lambda a, x: a + x * x).alias("_qn2")
+    )
+
+
+def _text_query(spark: SparkSession, text: str) -> DataFrame:
+    """The query frame of a literal text (each token weighs 1)."""
+    one = F.lit(1).cast("long")
+    pairs = F.transform(_dims(F.lit(text)), lambda d: F.struct(d.alias("d"), one.alias("c")))
+    return _query(spark.range(1, numPartitions=1).select(pairs.alias("_p")))
+
+
+def _scored(cand: DataFrame, query: DataFrame, score: str = "score") -> DataFrame:
+    """``cand`` rows whose body has tokens, each with the exact cosine
+    of its tf vector against the one-row ``query`` frame.
+
+    ``dot = Σ_tokens q[dim]`` and ``n2 = Σ_dim tf²`` are exact BIGINT
+    folds over the row's own dims; doubles appear only in the final
+    cosine, written as the DuckDB oracles write it, so scores are
+    bit-identical. A zero dot (an all-zero query too) scores 0.0."""
+    zero = F.lit(0).cast("long")
+    dims = F.col("_dims")
+    dot = F.aggregate(dims, zero, lambda a, d: a + F.col("_q")[d])
+    # each of a dim's tf tokens adds tf: Σ_tokens tf(dim) = Σ_dim tf²
+    n2 = F.aggregate(dims, zero, lambda a, d: a + F.size(F.filter(dims, lambda x: x == d)))
+    return (
+        # filter on tokens, not _dims: the filter is pushed below the
+        # projection, so a _dims predicate would hash every token twice
+        cand.where(F.size(tokens(F.col("body"))) > 0)
+        .withColumn("_dims", _dims(F.col("body")))
+        .crossJoin(F.broadcast(query))
+        .select(*cand.columns, dot.alias("_dot"), n2.alias("_n2"), "_qn2")
+        .select(
+            *cand.columns,
+            F.when(F.col("_dot") == 0, F.lit(0.0)).otherwise(
+                F.col("_dot").cast("double")
+                / (F.sqrt(F.col("_n2").cast("double")) * F.sqrt(F.col("_qn2").cast("double")))
+            ).alias(score),
+        )
+    )
 
 
 def cluster_search_over(
@@ -139,29 +191,7 @@ def cluster_search_over(
         c = c.where(F.array_contains(toks, t))
     c = _canonical_per_hash(c)
 
-    rows, norms = _embedded(c)
-    qrows = _query_vector(spark, text_filter)
-    qn2 = qrows.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
-
-    dots = (
-        rows.join(qrows, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    scored = (
-        c.join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("qn2").cast("double")))
-            ),
-        )
-    )
+    scored = _scored(c, _text_query(spark, text_filter))
     # V2/W1: one hit per rhythm_hash — guaranteed by the upfront
     # _canonical_per_hash dedup, so no second per-group window is needed
     return (
@@ -205,9 +235,11 @@ def triage_over(
             "cluster_id string, incident_count long, service string, "
             "severity string, anomaly_type string, score double",
         )
-    marked = c.sparkSession.createDataFrame(
-        [(h, True) for h in positive] + [(h, False) for h in negative],
-        "rhythm_hash string, is_pos boolean",
+    marked = c.sparkSession.range(1, numPartitions=1).select(
+        F.inline(F.array(*[
+            F.struct(F.lit(h).alias("rhythm_hash"), F.lit(pos).alias("is_pos"))
+            for hs, pos in ((positive, True), (negative, False)) for h in hs
+        ]))
     )
     return _triage_core(c, marked, len(positive), max(len(negative), 1), limit)
 
@@ -240,36 +272,21 @@ def triage(
 def _triage_core(
     c: DataFrame, marked: DataFrame, n_pos: int, n_neg: int, limit: int
 ) -> DataFrame:
+    """Score every canonical cluster but the examples against
+    ``q = 2·n_neg·Σ pos − n_pos·Σ neg`` (per listing: a repeated id
+    counts once per listing, an id may be both, an unknown id adds
+    nothing). The query is ONE global aggregate over the example rows'
+    dims, broadcast to the candidates."""
     c = _canonical_per_hash(c)
-    rows, norms = _embedded(c)
-    ex = rows.join(F.broadcast(marked), "rhythm_hash")
-    qd = ex.groupBy("dim").agg(
-        (
-            F.lit(2 * n_neg) * F.sum(F.when(F.col("is_pos"), F.col("w")).otherwise(0))
-            - F.lit(n_pos) * F.sum(F.when(~F.col("is_pos"), F.col("w")).otherwise(0))
-        ).alias("qw")
-    ).where(F.col("qw") != 0)
-    qn2 = qd.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
-
-    cand = c.join(F.broadcast(marked.select("rhythm_hash")), "rhythm_hash", "left_anti")
-    dots = (
-        rows.join(qd, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
+    coef = F.when(F.col("is_pos"), F.lit(2 * n_neg)).otherwise(F.lit(-n_pos)).cast("long")
+    examples = c.join(F.broadcast(marked), "rhythm_hash").agg(
+        F.flatten(F.collect_list(F.transform(
+            _dims(F.col("body")), lambda d: F.struct(d.alias("d"), coef.alias("c"))
+        ))).alias("_p")
     )
+    cand = c.join(F.broadcast(marked.select("rhythm_hash")), "rhythm_hash", "left_anti")
     return (
-        cand.join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("qn2").cast("double")))
-            ),
-        )
+        _scored(cand, _query(examples))
         .select(
             F.col("rhythm_hash").alias("cluster_id"),
             F.col("count").alias("incident_count"),
@@ -337,17 +354,6 @@ def clusters_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HYBRID_CUT_N = 100
 
-# tier2 daily store shape — pinned by the writer (promote.rollup_clusters
-# + write_tier2 partitionBy event_date); the tolerant reader supplies it
-# so no footer inference runs (see clusters_windowed_tolerant docstring)
-TIER2_DAILY_SCHEMA = (
-    "entity_type string, rhythm_hash string, start_ts bigint, "
-    "end_ts bigint, count bigint, service string, severity string, "
-    "anomaly_type string, anomaly_context string, body string, "
-    "sample_logs array<string>, event_date date"
-)
-
-
 def hybrid_tier2_search(
     spark: SparkSession,
     sf_dir: str,
@@ -375,7 +381,7 @@ def hybrid_tier2_search(
     Scale posture: the filter prunes first; each leg cuts to its exact
     global top-``cut_n`` (TakeOrderedAndProject heap); everything after
     the cuts touches <= 2*cut_n rows (the hybrid_rrf contract). Dense
-    dots ride the inverted (dim, w) join — never a dense matrix;
+    dots fold each candidate's dims against the broadcast query row;
     BM25 stats reduce to ONE broadcast row.
     """
     from via_spark.operators.search import RRF_K, bm25_scored
@@ -388,31 +394,8 @@ def hybrid_tier2_search(
     c = _canonical_per_hash(c)
 
     # dense leg — hashing-trick cosine against the query text
-    rows, norms = _embedded(c)
-    qrows = _query_vector(spark, text)
-    qn2 = qrows.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
-    dots = (
-        rows.join(qrows, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    dense = (
-        c.select("rhythm_hash")
-        .join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "dense_score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("n2").cast("double"))
-                    * F.sqrt(F.col("qn2").cast("double"))
-                )
-            ),
-        )
+    dense = _scored(
+        c.select("rhythm_hash", "body"), _text_query(spark, text), "dense_score"
     )
 
     # sparse leg — BM25 over the cluster bodies
@@ -480,8 +463,8 @@ def clusters_windowed_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt one day file -> this query returns the surviving days,
     the strict one throws.
 
-    The read passes tier2's STATIC schema (the engine writes this store
-    — promote.rollup_clusters pins the shape), which is what makes the
+    The read passes tier2's STATIC schema (``promote.TIER2_SCHEMA``,
+    pinned next to the writers), which is what makes the
     tolerance real: schema inference would read every footer through
     the session-level merge path, where a corrupt footer fails the
     inference job before the per-read ``ignoreCorruptFiles`` option
@@ -499,7 +482,7 @@ def clusters_windowed_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same window predicates as promote.read_tier2 (the canonical
     # definition), applied over the tolerant read
     df = (
-        spark.read.schema(TIER2_DAILY_SCHEMA)
+        spark.read.schema(promote.TIER2_SCHEMA)
         .option("ignoreCorruptFiles", "true")
         .parquet(path)
         .where(

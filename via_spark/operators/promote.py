@@ -50,6 +50,14 @@ def event_date(ts_sec: Column) -> Column:
     return F.date_add(F.lit("1970-01-01").cast("date"), (ts_sec / 86400).cast("int"))
 
 
+#: tier1 store shape, as :func:`tier1_rows` writes it (``event_date`` is
+#: the partition column). Readers pass it so no parquet footer is read.
+TIER1_SCHEMA = (
+    "service string, severity string, body string, ts long, "
+    "event_id long, template string, rhythm_hash string, event_date date"
+)
+
+
 def tier1_rows(flat: DataFrame) -> DataFrame:
     """Flattened (service, severity, body, ts) rows → tier1 rows: the
     one tier1 derivation shared by the streaming ingest and the API.
@@ -72,6 +80,17 @@ def _serialize_log(df: DataFrame) -> Column:
             df["event_id"], df["ts"], df["service"], df["severity"], df["body"]
         )
     )
+
+
+#: tier2 store shape, as :func:`rollup_clusters` and :func:`daily_rollup`
+#: write it through :func:`write_tier2` (``event_date`` is the partition
+#: column). Readers pass it so no parquet footer is read.
+TIER2_SCHEMA = (
+    "entity_type string, rhythm_hash string, start_ts long, end_ts long, "
+    "count long, service string, severity string, anomaly_type string, "
+    "anomaly_context string, body string, sample_logs array<string>, "
+    "event_date date"
+)
 
 
 def rollup_clusters(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
@@ -292,8 +311,9 @@ def read_tier2(
     (predicate on the partition column → Catalyst skips whole days),
     then the exact ``start_ts`` range filter applies within them.
     Either bound may be open (gte-only / lte-only, the reference's P1
-    range semantics)."""
-    df = spark.read.parquet(path)
+    range semantics). The pinned :data:`TIER2_SCHEMA` spares the footer
+    read; the files are still listed on every call, so appends show."""
+    df = spark.read.schema(TIER2_SCHEMA).parquet(path)
     if start_ts is not None:
         df = df.where(
             F.col("event_date") >= event_date(F.lit(start_ts).cast("long"))

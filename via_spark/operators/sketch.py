@@ -333,30 +333,6 @@ def kmv_retention_overlap(
 QSAMPLE_M = 256
 
 
-def _rank_quantile(
-    df: DataFrame, group: str, p_num: int, p_den: int = 100
-) -> DataFrame:
-    """Rank-based discrete quantile per group over a ``vfix`` column:
-    min v with p_den·|{x ≤ v}| ≥ p_num·n — the same all-integer
-    definition as stats.p95_rank_threshold; the cumulative window runs
-    over the per-(group, value) histogram, never the row stream."""
-    hist = df.groupBy(group, "vfix").agg(F.count(F.lit(1)).alias("c"))
-    wcum = (
-        Window.partitionBy(group)
-        .orderBy("vfix")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy(group)
-    c = hist.withColumn("cum", F.sum("c").over(wcum)).withColumn(
-        "n", F.sum("c").over(wall)
-    )
-    return (
-        c.where(F.lit(p_den) * F.col("cum") >= F.lit(p_num) * F.col("n"))
-        .groupBy(group)
-        .agg(F.min("vfix").alias(f"q{p_num}_fix"), F.max("n").alias("n"))
-    )
-
-
 def hash_sample_quantile_report(
     spark: SparkSession, sf_dir: str, m: int = QSAMPLE_M
 ) -> DataFrame:
@@ -375,6 +351,8 @@ def hash_sample_quantile_report(
     only, which is the number that tells you whether m is big enough
     for your tail.
     """
+    from via_spark.operators.stats import p95_rank_threshold
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
@@ -388,17 +366,16 @@ def hash_sample_quantile_report(
         .where(F.col("_rn") <= m)
         .select("event_type", "vfix")
     )
+
+    def q(df: DataFrame, pct: int) -> DataFrame:
+        return p95_rank_threshold(df, ["event_type"], F.col("vfix"), pct)
+
     parts = [
-        _rank_quantile(ev, "event_type", 50).withColumnRenamed("n", "n_rows"),
-        _rank_quantile(ev, "event_type", 95).drop("n"),
-        (
-            _rank_quantile(sample, "event_type", 50)
-            .withColumnRenamed("q50_fix", "s50_fix")
-            .withColumnRenamed("n", "sample_m")
-        ),
-        _rank_quantile(sample, "event_type", 95).withColumnRenamed(
-            "q95_fix", "s95_fix"
-        ).drop("n"),
+        q(ev, 50).withColumnRenamed("n", "n_rows"),
+        q(ev, 95).drop("n"),
+        q(sample, 50).withColumnRenamed("p50_fix", "s50_fix")
+        .withColumnRenamed("n", "sample_m"),
+        q(sample, 95).withColumnRenamed("p95_fix", "s95_fix").drop("n"),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -408,15 +385,15 @@ def hash_sample_quantile_report(
         "event_type",
         "n_rows",
         "sample_m",
-        (F.col("q50_fix").cast("double") / fix).alias("p50_exact"),
+        (F.col("p50_fix").cast("double") / fix).alias("p50_exact"),
         (F.col("s50_fix").cast("double") / fix).alias("p50_sample"),
         (
-            F.abs(F.col("s50_fix") - F.col("q50_fix")).cast("double") / fix
+            F.abs(F.col("s50_fix") - F.col("p50_fix")).cast("double") / fix
         ).alias("p50_abs_err"),
-        (F.col("q95_fix").cast("double") / fix).alias("p95_exact"),
+        (F.col("p95_fix").cast("double") / fix).alias("p95_exact"),
         (F.col("s95_fix").cast("double") / fix).alias("p95_sample"),
         (
-            F.abs(F.col("s95_fix") - F.col("q95_fix")).cast("double") / fix
+            F.abs(F.col("s95_fix") - F.col("p95_fix")).cast("double") / fix
         ).alias("p95_abs_err"),
     )
 

@@ -289,11 +289,13 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def p95_rank_threshold(
-    df: DataFrame, group_cols: list[str], vfix: Column
+    df: DataFrame, group_cols: list[str], vfix: Column, pct: int = 95
 ) -> DataFrame:
-    """Rank-based discrete p95 per group: the smallest fixed-point
-    value whose cumulative count reaches 95 % of the group (min v with
-    100·|{x ≤ v}| ≥ 95·n) — pure INTEGER arithmetic end to end.
+    """Rank-based discrete ``pct``-th percentile per group (default
+    p95): the smallest fixed-point value whose cumulative count reaches
+    ``pct`` % of the group (min v with 100·|{x ≤ v}| ≥ pct·n), as
+    column ``p{pct}_fix`` beside the group size ``n`` — pure INTEGER
+    arithmetic end to end.
 
     Why not ``percentile(v, 0.95)`` + floor: the interpolated double
     can land on either side of an integer when 0.95·(n−1) is near one
@@ -322,9 +324,9 @@ def p95_rank_threshold(
         "n", F.sum("c").over(wall)
     )
     return (
-        c.where(F.lit(100) * F.col("cum") >= F.lit(95) * F.col("n"))
+        c.where(F.lit(100) * F.col("cum") >= F.lit(pct) * F.col("n"))
         .groupBy(*group_cols)
-        .agg(F.min("v").alias("p95_fix"), F.max("n").alias("n"))
+        .agg(F.min("v").alias(f"p{pct}_fix"), F.max("n").alias("n"))
     )
 
 

@@ -1624,11 +1624,22 @@ def forensic_triage_sql(n_pos: int = 2, n_neg: int = 1, limit: int = 50) -> str:
     SELECT rhythm_hash, row_number() OVER (ORDER BY rhythm_hash) AS rn
     FROM (SELECT rhythm_hash FROM clusters ORDER BY rhythm_hash LIMIT {n_pos + n_neg})
 ),
-{_cemb_cte('clusters').strip()},
+"""
+        + triage_scored_sql(n_pos, n_neg, limit, f"rn <= {n_pos}", f"rn > {n_pos}")
+    )
+
+
+def triage_scored_sql(
+    n_pos: int, n_neg: int, limit: int, is_pos: str, is_neg: str
+) -> str:
+    """The triage tail over CTEs ``clusters`` (one canonical row per
+    hash) and ``marked`` (one row per example listing; ``is_pos`` /
+    ``is_neg`` are SQL predicates over its columns)."""
+    return f"""{_cemb_cte('clusters').strip()},
 qd AS (
     SELECT dim,
-           2*{n_neg}*SUM(CASE WHEN rn <= {n_pos} THEN w ELSE 0 END)
-           - {n_pos}*SUM(CASE WHEN rn > {n_pos} THEN w ELSE 0 END) AS qw
+           2*{n_neg}*SUM(CASE WHEN {is_pos} THEN w ELSE 0 END)
+           - {n_pos}*SUM(CASE WHEN {is_neg} THEN w ELSE 0 END) AS qw
     FROM cemb JOIN marked USING (rhythm_hash)
     GROUP BY dim HAVING qw <> 0
 ),
@@ -1654,7 +1665,6 @@ SELECT rhythm_hash AS cluster_id, "count" AS incident_count,
 FROM scored
 ORDER BY score DESC, cluster_id ASC LIMIT {limit}
 """
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -224,15 +224,15 @@ def start_detection(
 
     1. the T8 tee append, when ``tee_path`` is set;
     2. a listing of the tier1 files (``_store_has_data``; no job) — a
-       store with no committed data ends the trigger here;
-    3. tier1 schema inference (parquet footer read);
-    4. ``now = max(ts)`` over all of tier1 — ``None`` (no rows) ends
+       store with no committed data ends the trigger here; tier1 is
+       read with the pinned ``promote.TIER1_SCHEMA`` (no footer read);
+    3. ``now = max(ts)`` over all of tier1 — ``None`` (no rows) ends
        the trigger with nothing written;
-    5. the rules table read, when ``rules_path`` exists;
-    6. the detection plan (window counts, baseline top-k over the
+    4. the rules table read, when ``rules_path`` exists;
+    5. the detection plan (window counts, baseline top-k over the
        pre-window history, stats, joins), run once into a
        ``localCheckpoint``, then its few rows collected from there;
-    7. only when there are anomalies: the rollup of the recent window
+    6. only when there are anomalies: the rollup of the recent window
        against the checkpointed anomalies and ONE tier2 append
        (``promote.detect_and_promote``).
     """
@@ -252,7 +252,7 @@ def start_detection(
         # file, and reading that shell fails schema inference
         if not _store_has_data(spark, tier1_path):
             return  # ingest has not committed any files yet
-        tier1 = spark.read.parquet(tier1_path)
+        tier1 = spark.read.schema(promote.TIER1_SCHEMA).parquet(tier1_path)
         now = tier1.agg(F.max("ts")).collect()[0][0]
         rules = None
         if rules_path is not None and _store_exists(spark, rules_path):
