@@ -401,7 +401,8 @@ def test_triage_matches_oracle_on_edge_marks(spark, tmp_path):
     (``oracles.triage_scored_sql``, the tail of forensic_triage_sql)
     under explicit marks: a duplicate positive, an id that is both
     positive and negative, an unknown id, an empty-body cluster (never
-    a candidate) and an all-cancelling query vector (all scores 0.0)."""
+    a candidate), a body of 1,300 tokens and an all-cancelling query
+    vector (all scores 0.0)."""
     import duckdb
 
     from via_spark import oracles
@@ -416,6 +417,8 @@ def test_triage_matches_oracle_on_edge_marks(spark, tmp_path):
         "h_f": "user login ok",
         "h_g": "disk error error error",
         "h_h": "network timeout",
+        # a long body: hundreds of repeats of a few dims plus distinct ones
+        "h_i": " ".join(["disk error node"] * 300 + [f"t{i}" for i in range(400)]),
     }
     rows = _tier2_rows(bodies)
     eng = VIAEngine(spark, str(tmp_path / "triage_store"))
@@ -447,11 +450,11 @@ def test_triage_matches_oracle_on_edge_marks(spark, tmp_path):
     got = [tuple(r) for r in eng.tier2_triage(pos, neg).collect()]
     assert got == oracle(pos, neg)
     scores = {r[0]: r[-1] for r in got}
-    assert set(scores) == {"h_b", "h_f", "h_g", "h_h"}  # h_e: no tokens
+    assert set(scores) == {"h_b", "h_f", "h_g", "h_h", "h_i"}  # h_e: no tokens
     assert scores["h_b"] > 0 > scores["h_h"]
 
     pos, neg = ["h_a"], ["h_b"]  # q = 2·a − b = 0
     got = [tuple(r) for r in eng.tier2_triage(pos, neg).collect()]
     assert got == oracle(pos, neg)
-    assert [r[0] for r in got] == ["h_c", "h_d", "h_f", "h_g", "h_h"]
+    assert [r[0] for r in got] == ["h_c", "h_d", "h_f", "h_g", "h_h", "h_i"]
     assert all(r[-1] == 0.0 for r in got)

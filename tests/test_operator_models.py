@@ -486,9 +486,10 @@ def test_linear_attribution_conserves_value(spark, sf_oracle):
 def test_tolerant_windowed_skips_corrupt_day(spark, sf_oracle, tmp_path):
     """The U1 failure-tolerance semantics the reference implements with
     gather(return_exceptions=True) (forensic_analysis_service.py:55-60):
-    corrupt ONE day partition of a copied tier2 daily store — the
-    strict read fails the whole scan, the tolerant read returns exactly
-    the surviving days' rows."""
+    corrupt ONE day partition of a copied tier2 daily store inside the
+    queried window — the strict read fails the scan, the tolerant read
+    returns exactly the surviving days' rows. A corrupt day the window
+    prunes is never opened, so it fails neither read."""
     import datetime
     import shutil
 
@@ -521,13 +522,22 @@ def test_tolerant_windowed_skips_corrupt_day(spark, sf_oracle, tmp_path):
         f"event_date={epoch + datetime.timedelta(days=t // 86400)}" for t in (lo, hi)
     )
     in_window = [p for p in days if first <= p.name <= last]
+    pruned = [p for p in days if p not in in_window]
     assert len(in_window) >= 2, "window must span several stored days"
-    victim = in_window[0]
-    healthy_days = {p.name for p in days if p != victim}
-    for f in victim.glob("*.parquet"):
-        f.write_bytes(b"PAR1 this is not a parquet file")
+    assert pruned, "fixture store must hold days outside the window"
+    victims = (pruned[0], in_window[0])
+    healthy_days = {p.name for p in days if p not in victims}
 
-    # strict read: the corrupt day fails the scan at collect
+    def corrupt(day):
+        for f in day.glob("*.parquet"):
+            f.write_bytes(b"PAR1 this is not a parquet file")
+
+    # a corrupt day outside the window is pruned: the strict read holds
+    corrupt(pruned[0])
+    assert promote.read_tier2(spark, str(dst), start_ts=lo, end_ts=hi).collect()
+
+    # strict read: a corrupt day inside the window fails the scan at collect
+    corrupt(in_window[0])
     with pytest.raises((CapturedException, Py4JJavaError)):
         promote.read_tier2(spark, str(dst), start_ts=lo, end_ts=hi).collect()
 

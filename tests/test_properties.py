@@ -867,12 +867,12 @@ def test_p95_rank_threshold_matches_reference(spark, rows):
     (Oracle parity checks one fixture; this checks the formula.)"""
     from pyspark.sql import functions as F
 
-    from via_spark.operators.stats import p95_rank_threshold
+    from via_spark.operators.stats import rank_quantile
 
     df = spark.createDataFrame(rows, "g string, v long")
     got = {
         (r["g"], r["p95_fix"], r["n"])
-        for r in p95_rank_threshold(df, ["g"], F.col("v")).collect()
+        for r in rank_quantile(df, ["g"], F.col("v"), 95).collect()
     }
     expect = set()
     groups = {}

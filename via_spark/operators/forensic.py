@@ -30,9 +30,10 @@ dense 384-dim BIGINT query vector and its squared norm, from the
 literal text (one-row relation) or from one global aggregate over the
 example rows (triage) — and broadcasts it; each candidate row is scored
 where it lies by folding its own token dims against it (no explode, no
-shuffle on ``(hash, dim)``, no join on ``dim``), so cost follows the
-candidates' tokens. The only shuffle left is the per-hash canonical
-dedup; the top-k cut is a heap. Nothing here collects to the driver.
+shuffle on ``(hash, dim)``, no join on ``dim``): a sort of the row's
+dims and two linear folds, O(t log t) in its t tokens. The only
+shuffle left is the per-hash canonical dedup; the top-k cut is a heap.
+Nothing here collects to the driver.
 """
 
 from __future__ import annotations
@@ -131,8 +132,19 @@ def _scored(cand: DataFrame, query: DataFrame, score: str = "score") -> DataFram
     zero = F.lit(0).cast("long")
     dims = F.col("_dims")
     dot = F.aggregate(dims, zero, lambda a, d: a + F.col("_q")[d])
-    # each of a dim's tf tokens adds tf: Σ_tokens tf(dim) = Σ_dim tf²
-    n2 = F.aggregate(dims, zero, lambda a, d: a + F.size(F.filter(dims, lambda x: x == d)))
+
+    # over the sorted dims, the r-th token of a run adds r² − (r−1)² = 2r − 1
+    def run(s: Column, d: Column) -> Column:
+        return F.when(s["p"] == d, s["r"] + 1).otherwise(F.lit(1).cast("long"))
+
+    n2 = F.aggregate(
+        F.array_sort(dims),
+        F.struct(F.lit(-1).alias("p"), zero.alias("r"), zero.alias("n")),
+        lambda s, d: F.struct(
+            d.alias("p"), run(s, d).alias("r"), (s["n"] + 2 * run(s, d) - 1).alias("n")
+        ),
+        lambda s: s["n"],
+    )
     return (
         # filter on tokens, not _dims: the filter is pushed below the
         # projection, so a _dims predicate would hash every token twice

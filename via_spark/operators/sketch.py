@@ -351,7 +351,7 @@ def hash_sample_quantile_report(
     only, which is the number that tells you whether m is big enough
     for your tail.
     """
-    from via_spark.operators.stats import p95_rank_threshold
+    from via_spark.operators.stats import rank_quantile
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -368,7 +368,7 @@ def hash_sample_quantile_report(
     )
 
     def q(df: DataFrame, pct: int) -> DataFrame:
-        return p95_rank_threshold(df, ["event_type"], F.col("vfix"), pct)
+        return rank_quantile(df, ["event_type"], F.col("vfix"), pct)
 
     parts = [
         q(ev, 50).withColumnRenamed("n", "n_rows"),

@@ -288,12 +288,12 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def p95_rank_threshold(
-    df: DataFrame, group_cols: list[str], vfix: Column, pct: int = 95
+def rank_quantile(
+    df: DataFrame, group_cols: list[str], vfix: Column, pct: int
 ) -> DataFrame:
-    """Rank-based discrete ``pct``-th percentile per group (default
-    p95): the smallest fixed-point value whose cumulative count reaches
-    ``pct`` % of the group (min v with 100·|{x ≤ v}| ≥ pct·n), as
+    """Rank-based discrete ``pct``-th percentile per group: the
+    smallest fixed-point value whose cumulative count reaches ``pct`` %
+    of the group (min v with 100·|{x ≤ v}| ≥ pct·n), as
     column ``p{pct}_fix`` beside the group size ``n`` — pure INTEGER
     arithmetic end to end.
 
@@ -335,14 +335,14 @@ def above_p95_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact p95 — the per-group heavy-tail filter.
 
     The threshold is the rank-based discrete p95 over FIXED-POINT
-    values (see p95_rank_threshold — all-integer, so membership can
+    values (see rank_quantile — all-integer, so membership can
     never ride on a cross-engine double ulp), broadcast back onto the
     fact scan; the filter compares bigints in codegen. No window ever
     touches the fact table.
     """
     ev = load_table(spark, sf_dir, "events")
     vfix = F.floor(F.col("value") * 1_000_000).cast("long")
-    thr = p95_rank_threshold(ev, ["event_type"], vfix).select(
+    thr = rank_quantile(ev, ["event_type"], vfix, 95).select(
         "event_type", "p95_fix"
     )
     return (
@@ -623,7 +623,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics pipeline needs before trusting a mean at scale.
 
     All-integer doctrine: clip bounds are discrete rank thresholds
-    (min v with 100·cum ≥ k·n — same shape as ``p95_rank_threshold``,
+    (min v with 100·cum ≥ k·n — same shape as ``rank_quantile``,
     never an interpolated double); clipping clamps fixed-point
     BIGINTs; both means are ONE division of a BIGINT sum (no float
     accumulation — the sum of clamped int64 values is exact and

@@ -631,7 +631,7 @@ def doc_length_p95_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed-threshold form this table parameterizes).
 
     Exactness: token counts are already integers, so the rank-based
-    discrete p95 (``stats.p95_rank_threshold``) is pure integer
+    discrete p95 (``stats.rank_quantile``) is pure integer
     arithmetic end to end — no double exists anywhere in the contract.
 
     Scale posture: inherits the pinned histogram shape — one map-side-
@@ -639,11 +639,11 @@ def doc_length_p95_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the histogram (never the corpus), parallelism follows the
     source count.
     """
-    from via_spark.operators.stats import p95_rank_threshold
+    from via_spark.operators.stats import rank_quantile
 
     d = load_table(spark, sf_dir, "documents")
     t = d.select("source", F.size(tokens(F.col("text"))).cast("long").alias("len"))
-    return p95_rank_threshold(t, ["source"], F.col("len")).select(
+    return rank_quantile(t, ["source"], F.col("len"), 95).select(
         "source", F.col("p95_fix").alias("p95_tokens"), "n"
     )
 

@@ -557,7 +557,7 @@ def hourly_value_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-integer buckets (no timezone semantics to diverge on).
 
     The band is the rank-based discrete p95 over fixed-point values
-    (stats.p95_rank_threshold: smallest v with 100·cum ≥ 95·n, pure
+    (stats.rank_quantile: smallest v with 100·cum ≥ 95·n, pure
     integer arithmetic — no interpolated double anywhere in the
     contract, so the emitted band is engine-exact by construction).
 
@@ -565,7 +565,7 @@ def hourly_value_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cumulative window runs over the histogram partitioned by hour,
     so parallelism follows the bucket count and no global sort exists.
     """
-    from via_spark.operators.stats import p95_rank_threshold
+    from via_spark.operators.stats import rank_quantile
 
     ev = load_table(spark, sf_dir, "events")
     vfix = F.floor(F.col("value") * 1_000_000).cast("long")
@@ -573,7 +573,7 @@ def hourly_value_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts div 1000000000 div 3600").cast("long").alias("hour_num"),
         F.col("value"),
     )
-    return p95_rank_threshold(buck, ["hour_num"], vfix).select(
+    return rank_quantile(buck, ["hour_num"], vfix, 95).select(
         "hour_num", "p95_fix", "n"
     )
 
