@@ -194,23 +194,73 @@ def test_zorder_skips_more_row_groups_than_single_sort(spark, sf_oracle, tmp_pat
     assert got.count() == ev.count()
 
 
-def test_store_bypass_env_matches_store_results(spark, sf_smoke, monkeypatch):
-    """VIA_SPARK_TIER1_CACHE=0 routes every store accessor through the
-    raw computation; rows must match the store-backed path exactly
-    (guards the bypass branches of store.tier1 / store.cluster_labels,
-    which no driver query exercises)."""
+def test_store_matches_raw_computation(spark, sf_smoke):
+    """A store accessor returns exactly the rows of the computation it
+    materializes: ``store.tier1`` against ``rhythm.tier1_from_events``
+    and ``graph.dedup_clusters`` (the ``store.cluster_labels`` scan)
+    against ``graph.dedup_clusters_compute``."""
     from via_spark import store
-    from via_spark.operators import graph
+    from via_spark.operators import graph, rhythm
 
     t1_store = {tuple(r) for r in store.tier1(spark, sf_smoke).collect()}
     cl_store = {tuple(r) for r in graph.dedup_clusters(spark, sf_smoke).collect()}
 
-    monkeypatch.setenv("VIA_SPARK_TIER1_CACHE", "0")
-    t1_raw = {tuple(r) for r in store.tier1(spark, sf_smoke).collect()}
-    cl_raw = {tuple(r) for r in graph.dedup_clusters(spark, sf_smoke).collect()}
+    t1_raw = {tuple(r) for r in rhythm.tier1_from_events(spark, sf_smoke).collect()}
+    cl_raw = {tuple(r) for r in graph.dedup_clusters_compute(spark, sf_smoke).collect()}
 
     assert t1_raw == t1_store
     assert cl_raw == cl_store
+
+
+def _build_jobs(spark, group: str, build) -> list[int]:
+    """Spark job ids run while ``build()`` builds (not collects) a plan."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_fixture_reads_run_no_job(spark, sf_smoke):
+    """The session reader infers a fixture's schema once: building
+    ``dedup_minhash_pairs`` a second time on the same sf dir reads its
+    tables with the remembered schema, so the build runs no Spark job."""
+    import __spark_entry__ as em
+
+    build = em.queries()["dedup_minhash_pairs"]
+    build(spark, sf_smoke)
+    assert _build_jobs(spark, "test-warm-minhash", lambda: build(spark, sf_smoke)) == []
+
+
+def test_built_store_read_runs_no_job(spark, sf_smoke):
+    """Once ``store.cluster_labels`` is built, a further call is a
+    parquet scan with the store's remembered schema: no Spark job."""
+    from via_spark import store
+    from via_spark.operators.dedup import JACCARD_THRESHOLD
+
+    store.cluster_labels(spark, sf_smoke, JACCARD_THRESHOLD)
+    jobs = _build_jobs(
+        spark, "test-warm-labels",
+        lambda: store.cluster_labels(spark, sf_smoke, JACCARD_THRESHOLD),
+    )
+    assert jobs == []
+
+
+#: registered queries whose builder derives ``now`` through
+#: ``rhythm.current_now`` — a collect at build time
+CURRENT_NOW_BUILDERS = {
+    "active_rules_projection",
+    "clusters_windowed_tolerant",
+    "forensic_clusters_windowed",
+    "rhythm_anomalies",
+    "rhythm_baseline_stats",
+    "rhythm_frequency_sensitive",
+    "rhythm_novelty_small_baseline",
+    "rhythm_recent_counts",
+    "suppressed_anomalies",
+}
 
 
 def test_all_queries_survive_empty_tables(spark, tmp_path):
@@ -242,3 +292,15 @@ def test_all_queries_survive_empty_tables(spark, tmp_path):
         except Exception as exc:  # noqa: BLE001 — report all offenders at once
             failures.append(f"{name}: {type(exc).__name__}: {str(exc).splitlines()[0][:90]}")
     assert not failures, failures
+
+    # Lazy-builder contract (queries()): with every fixture schema and
+    # store already known, building a plan runs no Spark job. The only
+    # exceptions derive ``now`` from the store (rhythm.current_now
+    # collects the newest ts at build time).
+    eager = {
+        name
+        for name, fn in em.queries().items()
+        if _build_jobs(spark, f"test-rebuild-{name}", lambda fn=fn: fn(spark, str(empty)))
+    }
+    assert eager == CURRENT_NOW_BUILDERS, (
+        sorted(eager - CURRENT_NOW_BUILDERS), sorted(CURRENT_NOW_BUILDERS - eager))

@@ -241,14 +241,14 @@ class VIAEngine:
     def _rules(self) -> DataFrame:
         if not os.path.exists(self.rules_path):
             return control.empty_rules(self.spark)
-        return self.spark.read.parquet(self.rules_path)
+        return self.spark.read.schema(control.RULES_SCHEMA).parquet(self.rules_path)
 
     def _active_rules(self, now: int | None) -> DataFrame | None:
         """Rules in force at ``now``; None when no rule was ever written,
         so detection plans no anti-join against an empty table."""
         if not os.path.exists(self.rules_path):
             return None
-        return control.active_rules(self.spark.read.parquet(self.rules_path), now)
+        return control.active_rules(self._rules(), now)
 
     def _without_ruled(self, clusters: DataFrame, now: int | None) -> DataFrame:
         """Drop clusters whose hash has an active suppress/patch rule.

@@ -417,7 +417,7 @@ def save_schema(spark: SparkSession, path: str, source_name: str, schema: dict) 
     # must propagate — absorbing it would overwrite the whole registry
     # with this single entry
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
+        existing = spark.read.schema(REGISTRY_SCHEMA).parquet(path)
         merged = existing.join(new, "source_name", "left_anti").unionByName(new)
     else:
         merged = new
@@ -506,7 +506,7 @@ def get_schema(spark: SparkSession, path: str, source_name: str) -> dict | None:
     if not os.path.exists(path):
         return None
     rows = (
-        spark.read.parquet(path)
+        spark.read.schema(REGISTRY_SCHEMA).parquet(path)
         .where(F.col("source_name") == source_name)
         .collect()
     )
@@ -519,7 +519,8 @@ def list_schemas(spark: SparkSession, path: str) -> list[str]:
     if not os.path.exists(path):
         return []
     return sorted(
-        r["source_name"] for r in spark.read.parquet(path).select("source_name").collect()
+        r["source_name"]
+        for r in spark.read.schema(REGISTRY_SCHEMA).parquet(path).select("source_name").collect()
     )
 
 

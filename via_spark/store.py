@@ -1,4 +1,4 @@
-"""Session-scoped materialized tier1 store.
+"""Session-scoped materialized stores: tier1, tier2 and the label tables.
 
 In the reference architecture tier1 is a STORED table, maintained by
 ingest and scanned by every query (``app/services/ingestion_service.py``
@@ -16,11 +16,21 @@ stats support time-range skipping, like the ingest path's
 of that store — predicate pushdown and column pruning intact, which a
 ``.persist()`` (InMemoryRelation) would NOT preserve.
 
-Invalidation: the store is keyed by (Spark applicationId, absolute
-sf_dir) — a new session or a different dataset re-materializes. The
-fixture tables are immutable inputs, so no staleness path exists within
-a session. Set ``VIA_SPARK_TIER1_CACHE=0`` to bypass (every query then
-derives from raw events, the pre-store behavior).
+Every store in this module has one accessor shape (:func:`_stored`):
+build the key (Spark applicationId, kind, absolute sf_dir, params),
+materialize on first use (:func:`_materialize`), and read the result
+back through ``session.read_parquet`` — the same reader as the fixture
+tables, so a store's schema is inferred once per session and every
+later read passes it.
+
+Staleness contract (applies to every store in this module): the key
+carries NO file fingerprint — a new session or a different dataset
+re-materializes, but within a session the fixture tables are immutable
+inputs, so no staleness path exists. At cluster scale the stores are
+written by the ingest/promotion pipelines, not derived ad hoc. If the
+underlying parquet were rewritten mid-application, consumers would
+keep reading the materialized store; restart the session to force
+re-derivation.
 
 Scale posture: at 100 TB this module IS the architecture — tier1 is
 written once, date-partitioned and ts-sorted, by the streaming ingest
@@ -37,6 +47,8 @@ import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from via_spark.session import read_parquet
 
 _STORES: dict[tuple, str] = {}
 _LOCK = threading.Lock()
@@ -99,6 +111,22 @@ def _materialize(key: tuple, prefix: str, write) -> str:
     return path
 
 
+def _key(spark: SparkSession, kind: str, sf_dir: str, *params) -> tuple:
+    return (spark.sparkContext.applicationId, kind, os.path.abspath(sf_dir), *params)
+
+
+def _stored(spark: SparkSession, kind: str, sf_dir: str, params: tuple, build) -> DataFrame:
+    """The ``kind`` store for (``sf_dir``, ``params``): ``build()``'s
+    frame, written on first use and read back through the session
+    reader on every call."""
+    path = _materialize(
+        _key(spark, kind, sf_dir, *params),
+        f"via_{kind}_",
+        lambda p: build().write.mode("overwrite").parquet(p),
+    )
+    return read_parquet(spark, path)
+
+
 def prewarm(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the four label stores CONCURRENTLY (no-op when
     already built). The four fixpoints are independent multi-job
@@ -110,9 +138,7 @@ def prewarm(spark: SparkSession, sf_dir: str) -> None:
     census (history/OPTIMIZATION_r14.md). Store consumers that need several
     stores call this first; single-store consumers skip it.
     """
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return  # bypass mode derives inline; nothing to warm
-    memo = (spark.sparkContext.applicationId, "prewarmed", os.path.abspath(sf_dir))
+    memo = _key(spark, "prewarmed", sf_dir)
     with _LOCK:
         if memo in _WARMED:
             return  # already warmed this session — skip the thread pool
@@ -145,20 +171,10 @@ def tier1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tier1 log store for ``sf_dir`` — materialized on first use."""
     from via_spark.operators import rhythm  # lazy: rhythm imports nothing back
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return rhythm.tier1_from_events(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _materialize(
-        key,
-        "via_tier1_",
-        lambda p: (
-            rhythm.tier1_from_events(spark, sf_dir)
-            .sortWithinPartitions("ts_ns")
-            .write.mode("overwrite")
-            .parquet(p)
-        ),
+    return _stored(
+        spark, "tier1", sf_dir, (),
+        lambda: rhythm.tier1_from_events(spark, sf_dir).sortWithinPartitions("ts_ns"),
     )
-    return spark.read.parquet(path)
 
 
 def cluster_labels(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
@@ -172,34 +188,13 @@ def cluster_labels(spark: SparkSession, sf_dir: str, threshold: float) -> DataFr
     pays the optimizer walk again and re-drives the loop's per-round
     actions. Writing the converged labels once gives every consumer a
     three-column parquet scan — the same write-once shape as tier1/2.
-
-    Staleness contract (applies to every store in this module): the
-    cache key is (applicationId, path, params) with NO file fingerprint
-    — the fixture tables are immutable inputs, and at cluster scale the
-    stores are written by the ingest/promotion pipelines, not derived
-    ad hoc. If the underlying parquet were rewritten mid-application,
-    consumers would keep reading the materialized labels; set
-    VIA_SPARK_TIER1_CACHE=0 (or restart the session) to force
-    re-derivation in that scenario.
     """
     from via_spark.operators import graph
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return graph.dedup_clusters_compute(spark, sf_dir, threshold)
-    key = (
-        spark.sparkContext.applicationId,
-        "clusters",
-        os.path.abspath(sf_dir),
-        threshold,
+    return _stored(
+        spark, "clusters", sf_dir, (threshold,),
+        lambda: graph.dedup_clusters_compute(spark, sf_dir, threshold),
     )
-    path = _materialize(
-        key,
-        "via_clusters_",
-        lambda p: graph.dedup_clusters_compute(spark, sf_dir, threshold)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)
 
 
 def tier2_daily_path(spark: SparkSession, sf_dir: str, **variant) -> str:
@@ -220,12 +215,6 @@ def tier2_daily_path(spark: SparkSession, sf_dir: str, **variant) -> str:
     """
     from via_spark.operators import promote, rhythm
 
-    key = (
-        spark.sparkContext.applicationId,
-        "tier2daily",
-        os.path.abspath(sf_dir),
-        tuple(sorted(variant.items())),
-    )
     def _write(p: str) -> None:
         t1 = tier1(spark, sf_dir)
         now = rhythm.current_now(t1)
@@ -238,6 +227,7 @@ def tier2_daily_path(spark: SparkSession, sf_dir: str, **variant) -> str:
         else:
             promote.write_tier2(daily, p, mode="overwrite")
 
+    key = _key(spark, "tier2daily", sf_dir, tuple(sorted(variant.items())))
     return _materialize(key, "via_tier2daily_", _write)
 
 
@@ -258,102 +248,52 @@ def tier2(spark: SparkSession, sf_dir: str, **variant) -> DataFrame:
     """
     from via_spark.operators import promote
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return promote.promotion_rollup(spark, sf_dir, **variant)
-    key = (
-        spark.sparkContext.applicationId,
-        "tier2",
-        os.path.abspath(sf_dir),
-        tuple(sorted(variant.items())),
+    return _stored(
+        spark, "tier2", sf_dir, (tuple(sorted(variant.items())),),
+        lambda: promote.promotion_rollup(spark, sf_dir, **variant),
     )
-    path = _materialize(
-        key,
-        "via_tier2_",
-        lambda p: promote.promotion_rollup(spark, sf_dir, **variant)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)
 
 
 def embedding_cluster_labels(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
     """Embedding near-dup cluster labels — materialized on first use
-    per threshold, same write-once shape and staleness contract as
-    :func:`cluster_labels` (the MinHash labels)."""
+    per threshold, same write-once shape as :func:`cluster_labels` (the
+    MinHash labels)."""
     from via_spark.operators import graph
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return graph.embedding_clusters_compute(spark, sf_dir, threshold)
-    key = (
-        spark.sparkContext.applicationId,
-        "emb_clusters",
-        os.path.abspath(sf_dir),
-        threshold,
+    return _stored(
+        spark, "emb_clusters", sf_dir, (threshold,),
+        lambda: graph.embedding_clusters_compute(spark, sf_dir, threshold),
     )
-    path = _materialize(
-        key,
-        "via_emb_clusters_",
-        lambda p: graph.embedding_clusters_compute(spark, sf_dir, threshold)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)
 
 
 def phash_cluster_labels(
     spark: SparkSession, sf_dir: str, max_hamming: int
 ) -> DataFrame:
     """Perceptual-hash (dHash) near-dup cluster labels — materialized on
-    first use per max_hamming, same write-once shape and staleness
-    contract as :func:`cluster_labels`."""
+    first use per max_hamming, same write-once shape as
+    :func:`cluster_labels`."""
     from via_spark.operators import graph
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return graph.phash_clusters_compute(spark, sf_dir, max_hamming)
-    key = (
-        spark.sparkContext.applicationId,
-        "phash_clusters",
-        os.path.abspath(sf_dir),
-        max_hamming,
+    return _stored(
+        spark, "phash_clusters", sf_dir, (max_hamming,),
+        lambda: graph.phash_clusters_compute(spark, sf_dir, max_hamming),
     )
-    path = _materialize(
-        key,
-        "via_phash_clusters_",
-        lambda p: graph.phash_clusters_compute(spark, sf_dir, max_hamming)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)
 
 
 def semdedup_labels(spark: SparkSession, sf_dir: str,
                     k: int | None, iters: int, tau: float) -> DataFrame:
     """SemDeDup (two-level k-means + within-sub-cell near-dup) label
     table — materialized on first use per (k, iters, tau), same
-    write-once shape and staleness contract as :func:`cluster_labels`.
+    write-once shape as :func:`cluster_labels`.
     ``k=None`` (the adaptive two-level path) is the only value the
     production surface passes; an explicit ``k`` selects the flat
     pinned path and is cached under its literal value — planted-
     fixture tests call ``vector.semdedup_compute`` directly instead."""
     from via_spark.operators import vector
 
-    if os.environ.get("VIA_SPARK_TIER1_CACHE", "1") == "0":
-        return vector.semdedup_compute(spark, sf_dir, k, iters, tau)
-    key = (
-        spark.sparkContext.applicationId,
-        "semdedup",
-        os.path.abspath(sf_dir),
-        k,
-        iters,
-        tau,
+    return _stored(
+        spark, "semdedup", sf_dir, (k, iters, tau),
+        lambda: vector.semdedup_compute(spark, sf_dir, k, iters, tau),
     )
-    path = _materialize(
-        key,
-        "via_semdedup_",
-        lambda p: vector.semdedup_compute(spark, sf_dir, k, iters, tau)
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)

@@ -258,7 +258,9 @@ def start_detection(
         if rules_path is not None and _store_exists(spark, rules_path):
             from via_spark.operators import control
 
-            rules = control.active_rules(spark.read.parquet(rules_path), now)
+            rules = control.active_rules(
+                spark.read.schema(control.RULES_SCHEMA).parquet(rules_path), now
+            )
         promote.detect_and_promote(
             spark, tier1, now, window_sec, tier2_path, rules=rules,
             **detect_kwargs,
@@ -389,7 +391,7 @@ def start_rollup_maintenance(
         # commit (see start_detection's guard)
         if not touched or not _store_has_data(spark, tier1_path):
             return
-        tier1 = spark.read.parquet(tier1_path)
+        tier1 = spark.read.schema(promote.TIER1_SCHEMA).parquet(tier1_path)
         recomputed = (
             tier1.where(F.col("event_date").isin(touched))
             .withColumn(
@@ -544,12 +546,12 @@ def neardup_gate_process_batch(
     if _store_exists(spark, f"{store_dir}/bands"):
         not_self = F.col("batch_id") != batch_id
         corpus_bands = (
-            spark.read.parquet(f"{store_dir}/bands")
+            spark.read.schema(bands.schema).parquet(f"{store_dir}/bands")
             .where(not_self)
             .select(F.col("doc_id").alias("matched_doc"), "band", "band_key")
         )
         corpus_sh = (
-            spark.read.parquet(f"{store_dir}/shingles")
+            spark.read.schema(sh.schema).parquet(f"{store_dir}/shingles")
             .where(not_self)
             .select(F.col("doc_id").alias("matched_doc"), F.col("sh").alias("sh_b"))
         )
@@ -714,7 +716,7 @@ def embedding_gate_process_batch(
     corpus = None
     n_corpus = 0
     if _store_exists(spark, f"{store_dir}/sigs"):
-        corpus = spark.read.parquet(f"{store_dir}/sigs").where(
+        corpus = spark.read.schema(batch.schema).parquet(f"{store_dir}/sigs").where(
             F.col("batch_id") != batch_id
         )
         n_corpus = corpus.count()
@@ -836,6 +838,34 @@ def half_life_decay_from_daily(daily: DataFrame) -> DataFrame:
     )
 
 
+#: Sketch-store schemas, shared by each fold (write) and its
+#: ``*_from_store`` reader; CM and MG add the ``batch_id`` partition.
+KMV_STORE_DDL = "day long, uh long"
+CM_STORE_DDL = "row_i int, pos long, n long"
+BLOOM_STORE_DDL = "pos long"
+MG_STORE_DDL = "key long, cnt long, decr long, n long"
+SAMPLE_STORE_DDL = "grp string, sk long, tie long, vfix long"
+HLL_STORE_DDL = "day long, reg long, m_rank int"
+
+
+def _fold_into_store(
+    spark: SparkSession, store_path: str, ddl: str, incoming: DataFrame, merge
+) -> None:
+    """Collect-and-rewrite fold of a set-valued sketch store (KMV,
+    Bloom, sample, HLL): ``merge`` (idempotent, so a no-op extra on the
+    first batch) over the store's rows plus ``incoming``, collected —
+    ≤ state-sized, and no plan then reads the files it overwrites — and
+    written back. ONLY a store with no committed data means "first
+    batch"; a read error propagates and leaves the store as it was."""
+    if _store_has_data(spark, store_path):
+        existing = spark.read.schema(ddl).parquet(store_path)
+        incoming = existing.unionByName(incoming)
+    rows = merge(incoming).collect()
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode("overwrite").parquet(
+        store_path
+    )
+
+
 def merge_kmv_partials(
     spark: SparkSession, batch_df: DataFrame, store_path: str, k: int = 64
 ) -> None:
@@ -857,31 +887,22 @@ def merge_kmv_partials(
     """
     from pyspark.sql import Window
 
-    incoming = batch_df.select("day", "uh").distinct()
-    if _store_has_data(spark, store_path):
-        existing = spark.read.parquet(store_path).select("day", "uh")
-        merged = existing.unionByName(incoming).distinct()
-    else:  # first batch: store not yet created
-        merged = incoming
     w = Window.partitionBy("day").orderBy(F.col("uh").asc())
-    cut = (
-        merged.withColumn("_rn", F.row_number().over(w))
+    # the cut is ≤ k·days rows
+    _fold_into_store(
+        spark, store_path, KMV_STORE_DDL, batch_df.select("day", "uh"),
+        lambda df: df.distinct()
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select("day", "uh")
+        .select("day", "uh"),
     )
-    # the cut is ≤ k·days rows — collect-and-rewrite stays tiny and
-    # avoids read/overwrite races on the same parquet path
-    rows = cut.collect()
-    spark.createDataFrame(rows, "day long, uh long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(store_path)
 
 
 def kmv_estimates_from_store(spark: SparkSession, store_path: str, k: int = 64) -> DataFrame:
     """Read-time estimator over the streaming KMV store: per day,
     (k-1)·2^48/kth_min once k hashes accumulated, exact count below —
     the same formula as ``sketch.kmv_distinct_report``."""
-    store = spark.read.parquet(store_path)
+    store = spark.read.schema(KMV_STORE_DDL).parquet(store_path)
     agg = store.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_head"), F.max("uh").alias("kth_min")
     )
@@ -921,9 +942,9 @@ def merge_cm_partials(
     """
     part = batch_df.groupBy("row_i", "pos").agg(F.count(F.lit(1)).alias("n"))
     rows = part.collect()  # ≤ depth·width rows by construction
-    spark.createDataFrame(rows, "row_i int, pos long, n long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{store_path}/batch_id={int(batch_id)}")
+    spark.createDataFrame(rows, CM_STORE_DDL).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{store_path}/batch_id={int(batch_id)}")
 
 
 def cm_estimates_from_store(
@@ -943,7 +964,7 @@ def cm_estimates_from_store(
     carries more than the keys being asked about.
     """
     counters = (
-        spark.read.parquet(store_path)
+        spark.read.schema(CM_STORE_DDL).parquet(store_path)
         .groupBy("row_i", "pos")
         .agg(F.sum("n").alias("counter"))
     )
@@ -971,16 +992,10 @@ def merge_bloom_partials(
     stream length; the rewrite is collect-and-overwrite like the KMV
     store (tiny by construction, no read/overwrite race).
     """
-    incoming = batch_df.select("pos").distinct()
-    if _store_has_data(spark, store_path):
-        existing = spark.read.parquet(store_path).select("pos")
-        merged = existing.unionByName(incoming).distinct()
-    else:  # first batch: store not yet created
-        merged = incoming
-    rows = merged.collect()
-    spark.createDataFrame(rows, "pos long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(store_path)
+    _fold_into_store(
+        spark, store_path, BLOOM_STORE_DDL, batch_df.select("pos"),
+        lambda df: df.distinct(),
+    )
 
 
 def bloom_membership_from_store(
@@ -994,7 +1009,7 @@ def bloom_membership_from_store(
     construction — the live test pins it); false positives are the
     filter's one-sided error, measured by the batch report.
     """
-    bits = spark.read.parquet(store_path).select("pos").distinct().withColumn(
+    bits = spark.read.schema(BLOOM_STORE_DDL).parquet(store_path).distinct().withColumn(
         "set_bit", F.lit(1)
     )
     return (
@@ -1044,9 +1059,7 @@ def merge_mg_partials(
         if int(r["cnt"]) > decr
     ]
     rows.append((None, None, decr, int(n_b)))
-    spark.createDataFrame(
-        rows, "key long, cnt long, decr long, n long"
-    ).coalesce(1).write.mode("overwrite").parquet(
+    spark.createDataFrame(rows, MG_STORE_DDL).coalesce(1).write.mode("overwrite").parquet(
         f"{store_path}/batch_id={int(batch_id)}"
     )
 
@@ -1066,7 +1079,7 @@ def mg_heavy_hitters_from_store(spark: SparkSession, store_path: str) -> DataFra
     hash-agg over that tiny store and the meta totals broadcast back —
     nothing here ever touches the raw stream again.
     """
-    store = spark.read.parquet(store_path)
+    store = spark.read.schema(MG_STORE_DDL).parquet(store_path)
     meta = store.where(F.col("key").isNull()).agg(
         F.sum("decr").alias("error_bound"), F.sum("n").alias("total_n")
     )
@@ -1113,27 +1126,20 @@ def merge_sample_partials(
     from pyspark.sql import Window
 
     w = Window.partitionBy("grp").orderBy(F.col("sk").asc(), F.col("tie").asc())
-    incoming = (
-        batch_df.select("grp", "sk", "tie", "vfix")
-        .distinct()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= m)
-        .drop("_rn")
+
+    def bottom_m(df: DataFrame) -> DataFrame:
+        return (
+            df.distinct()
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= m)
+            .drop("_rn")
+        )
+
+    # ≤ m·groups rows by construction
+    _fold_into_store(
+        spark, store_path, SAMPLE_STORE_DDL,
+        bottom_m(batch_df.select("grp", "sk", "tie", "vfix")), bottom_m,
     )
-    if _store_has_data(spark, store_path):
-        existing = spark.read.parquet(store_path).select("grp", "sk", "tie", "vfix")
-        merged = existing.unionByName(incoming).distinct()
-    else:  # first batch: store not yet created
-        merged = incoming
-    cut = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= m)
-        .select("grp", "sk", "tie", "vfix")
-    )
-    rows = cut.collect()  # ≤ m·groups rows by construction
-    spark.createDataFrame(
-        rows, "grp string, sk long, tie long, vfix long"
-    ).coalesce(1).write.mode("overwrite").parquet(store_path)
 
 
 def sample_quantiles_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1150,7 +1156,7 @@ def sample_quantiles_from_store(spark: SparkSession, store_path: str) -> DataFra
     histogram-sized window arithmetic over that."""
     from pyspark.sql import Window
 
-    store = spark.read.parquet(store_path)
+    store = spark.read.schema(SAMPLE_STORE_DDL).parquet(store_path)
     hist = store.groupBy("grp", "vfix").agg(F.count(F.lit(1)).alias("c"))
     wcum = (
         Window.partitionBy("grp")
@@ -1192,22 +1198,12 @@ def merge_hll_partials(
     (tests/test_streaming.py::test_streaming_hll_store_matches_batch_sketch).
     State is O(2^p · days) regardless of cardinality.
     """
-    incoming = batch_df.groupBy("day", "reg").agg(F.max("rank").alias("m_rank"))
-    if _store_has_data(spark, store_path):
-        existing = spark.read.parquet(store_path)
-        merged = (
-            existing.unionByName(incoming)
-            .groupBy("day", "reg")
-            .agg(F.max("m_rank").alias("m_rank"))
-        )
-    else:  # first batch: store not yet created
-        merged = incoming
-    # ≤ 2^p · days rows — collect-and-rewrite stays tiny and avoids
-    # read/overwrite races on the same parquet path
-    rows = merged.collect()
-    spark.createDataFrame(rows, "day long, reg long, m_rank int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(store_path)
+    # ≤ 2^p · days rows
+    _fold_into_store(
+        spark, store_path, HLL_STORE_DDL,
+        batch_df.select("day", "reg", F.col("rank").alias("m_rank")),
+        lambda df: df.groupBy("day", "reg").agg(F.max("m_rank").alias("m_rank")),
+    )
 
 
 def hll_estimates_from_store(
@@ -1219,7 +1215,7 @@ def hll_estimates_from_store(
     dyadic doubles), so the streamed estimate is bit-identical to the
     batch sketch over the same records."""
     m = 1 << p
-    store = spark.read.parquet(store_path)
+    store = spark.read.schema(HLL_STORE_DDL).parquet(store_path)
     alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(float(m)))
     per_day = store.groupBy("day").agg(
         F.count(F.lit(1)).cast("long").alias("registers_hit"),
