@@ -51,12 +51,12 @@ def main() -> int:
         EMB_COS_THRESHOLD,
         neardup_pairs_over,
     )
-    from via_spark.operators.vector import dot_fix
+    from via_spark.functions.vector import dot_fix
 
     def vmap_and_reps():
         e = load_table(spark, sf, "embeddings").select(
             "vec_id", "embedding",
-            dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+            dot_fix("embedding", "embedding").alias("n_fix"),
         )
         nz = e.where(F.col("n_fix") > 0)
         fam = nz.groupBy("embedding").agg(F.min("vec_id").alias("rep"))

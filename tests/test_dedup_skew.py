@@ -488,41 +488,15 @@ def test_adaptive_bits_formula_matches_python_model(spark):
 
 
 def test_probe_join_emits_each_pair_once(spark, sf_oracle):
-    """A candidate pair at Hamming distance d <= radius matches EXACTLY
-    the one probe that flips its differing bit set — so the probe-join
-    needs no dropDuplicates (the r9 regression shuffled the candidate
-    set for nothing). Proven on the real fixture for the adaptive path
-    and for the static radius-2 path (where 2-bit flips widen the probe
-    list but still cannot double-emit)."""
+    """A candidate pair at Hamming distance <= 1 matches EXACTLY one
+    directional probe — so the probe-join needs no dropDuplicates (the
+    r9 regression shuffled the candidate set for nothing). Proven on
+    the real fixture."""
     from via_spark.operators.dedup import neardup_embedding_pairs
 
-    for kwargs in ({}, {"bits": 6, "probe_radius": 2}):
-        # threshold=-1 keeps EVERY candidate (cosine >= -1 always), so
-        # the output IS the raw candidate set
-        pairs = neardup_embedding_pairs(spark, sf_oracle, threshold=-1.0, **kwargs)
-        dup = (
-            pairs.groupBy("vec_a", "vec_b")
-            .count()
-            .where(F.col("count") > 1)
-            .count()
-        )
-        assert dup == 0, f"duplicate candidate pairs under {kwargs}"
-        assert pairs.count() > 0
-
-
-def test_adaptive_and_pinned_bits_agree_where_domains_match(spark, sf_oracle):
-    """At sf0.01 the adaptive formula lands on bits=6; pinning bits=6
-    explicitly must give the identical pair set — the adaptive path is
-    a sizing policy, not a different algorithm."""
-    from via_spark.operators.dedup import neardup_embedding_pairs
-
-    got_adaptive = {
-        (r["vec_a"], r["vec_b"])
-        for r in neardup_embedding_pairs(spark, sf_oracle).collect()
-    }
-    got_pinned = {
-        (r["vec_a"], r["vec_b"])
-        for r in neardup_embedding_pairs(spark, sf_oracle, bits=6).collect()
-    }
-    assert got_adaptive == got_pinned
-    assert len(got_adaptive) > 0
+    # threshold=-1 keeps EVERY candidate (cosine >= -1 always), so the
+    # output IS the raw candidate set
+    pairs = neardup_embedding_pairs(spark, sf_oracle, threshold=-1.0)
+    dup = pairs.groupBy("vec_a", "vec_b").count().where(F.col("count") > 1).count()
+    assert dup == 0
+    assert pairs.count() > 0

@@ -672,30 +672,37 @@ def test_phash_clusters_exact_collapse_semantics(spark, tmp_path):
     assert got[10][1] == 1 and got[11][1] == 1
 
 
-def test_dot_fix_arrow_bit_identical_to_native(spark, sf_oracle):
-    """dot_fix_arrow (the numpy/Arrow twin used on high-volume pair
-    frames, r14) must produce the EXACT BIGINT dot_fix produces for
-    every pair it replaces — adversarial inputs included: negatives
-    (floor truncates toward -inf on both sides), zeros, denormal-ish
-    magnitudes, and the real fixture vectors."""
-    from via_spark.operators.vector import dot_fix, dot_fix_arrow
+def _numpy_dot_fix(x, y) -> int:
+    """Independent reference for ``dot_fix``: float64 multiply, ×1e9,
+    floor, exact int64 sum."""
+    import numpy as np
+
+    prod = np.asarray(x, dtype=np.float64) * np.asarray(y, dtype=np.float64) * 1e9
+    return int(np.floor(prod).astype(np.int64).sum())
+
+
+def test_dot_fix_matches_numpy_reference(spark, sf_oracle):
+    """dot_fix gives the EXACT BIGINT of the numpy reference on the real
+    fixture vectors and on adversarial inputs: negatives (floor goes
+    toward -inf), zeros, tiny and large magnitudes, and products that
+    are not exact in binary."""
+    from via_spark.functions.vector import dot_fix
     from via_spark.session import load_table
 
     # real fixture pairs: every corpus vector against a rotating partner
     e = load_table(spark, sf_oracle, "embeddings").select("vec_id", "embedding")
     n = e.count()
     pairs = (
-        e.alias("a")
-        .join(
+        e.join(
             e.selectExpr("(vec_id + 7) % {} as vec_id".format(n), "embedding as emb_b"),
             "vec_id",
         )
         .select(F.col("embedding").alias("x"), F.col("emb_b").alias("y"))
+        .select("x", "y", dot_fix("x", "y").alias("d"))
+        .collect()
     )
-    mismatch = pairs.where(
-        dot_fix(F.col("x"), F.col("y")) != dot_fix_arrow(F.col("x"), F.col("y"))
-    ).count()
-    assert mismatch == 0
+    assert len(pairs) == n
+    assert all(r["d"] == _numpy_dot_fix(r["x"], r["y"]) for r in pairs)
 
     # synthetic adversarial values (exact-representability edge cases)
     rows = [
@@ -708,11 +715,85 @@ def test_dot_fix_arrow_bit_identical_to_native(spark, sf_oracle):
         [(list(map(float, x)), list(map(float, y))) for x, y in rows],
         "x array<double>, y array<double>",
     )
-    got = df.select(
-        dot_fix(F.col("x"), F.col("y")).alias("native"),
-        dot_fix_arrow(F.col("x"), F.col("y")).alias("arrow"),
-    ).collect()
-    assert all(r["native"] == r["arrow"] for r in got), got
+    got = [r["d"] for r in df.select(dot_fix("x", "y").alias("d")).collect()]
+    assert got == [_numpy_dot_fix(x, y) for x, y in rows]
+
+
+def test_dot_fix_null_nan_ragged_yield_null(spark):
+    """The dot's one NULL contract: a NULL element, a NaN element or
+    arrays of different length give NULL, never a partial sum."""
+    from via_spark.functions.vector import dot_fix
+
+    rows = [
+        (0, [1.0, 2.5], [1.0, 1.0]),
+        (1, [1.0, None], [1.0, 1.0]),
+        (2, [1.0, float("nan")], [1.0, 1.0]),
+        (3, [1.0], [1.0, 2.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, x array<double>, y array<double>")
+    got = {r["id"]: r["d"] for r in df.select("id", dot_fix("x", "y").alias("d")).collect()}
+    assert got == {0: 3_500_000_000, 1: None, 2: None, 3: None}
+
+
+def test_dot_fix_builds_no_python_lambda(spark, monkeypatch):
+    """dot_fix and the cosine scorer are SQL expressions: building them
+    makes no Python lambda (each one costs py4j round trips)."""
+    import pyspark.sql.functions.builtin as builtin
+
+    from via_spark.functions.vector import dot_fix, with_cosine
+
+    def no_lambda(f):
+        raise AssertionError("built a Python lambda")
+
+    df = spark.range(1).selectExpr("array(1.0D, 2.0D) AS a", "array(2.0D, 1.0D) AS b")
+    monkeypatch.setattr(builtin, "_create_lambda", no_lambda)
+    dot_fix("a", "b")
+    scored = with_cosine(df, "a", "b")
+    monkeypatch.undo()
+    assert abs(scored.first()["score"] - 0.8) < 1e-12
+
+
+def test_dot_sites_plan_no_python_eval(spark, sf_oracle):
+    """The four densest pair-grain dot sites evaluate the dot on the
+    JVM: their plans hold no ArrowEvalPython (Python worker) node."""
+    from via_spark.operators import dedup, vector
+    from via_spark.plans import executed_plan
+
+    for fn in (
+        dedup.lsh_density_outliers,
+        dedup.neardup_lsh_recall_report,
+        vector.semdedup_compute,
+        vector.semdedup_containment_report,
+    ):
+        assert "ArrowEvalPython" not in executed_plan(fn(spark, sf_oracle)), fn.__name__
+
+
+def test_semdedup_survives_null_element(spark, tmp_path):
+    """One NULL element in one vector does not fail the SemDeDup build:
+    that vector's cosines are NULL, so it is never marked a duplicate
+    and never marks one; the planted identical family still resolves."""
+    from via_spark.operators.vector import semdedup_compute
+
+    dim = 16
+
+    def onehot(i):
+        v = [0.0] * dim
+        v[i % dim] = 1.0
+        return v
+
+    rows = (
+        [(i, onehot(0)) for i in range(5)]
+        + [(100 + i, onehot(2 + i)) for i in range(6)]
+        + [(200, [None] + [1.0] * (dim - 1))]
+    )
+    d = tmp_path / "sf"
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    got = {r["vec_id"]: r["is_dup"] for r in semdedup_compute(spark, str(d)).collect()}
+    assert len(got) == len(rows)
+    assert got[200] is False
+    assert got[0] is False and all(got[i] for i in range(1, 5))
 
 
 def test_simhash_arrow_bit_identical_to_native(spark, sf_oracle):

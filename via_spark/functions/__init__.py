@@ -15,10 +15,3 @@ from via_spark.functions.text import (  # noqa: F401
     template,
     tokens,
 )
-from via_spark.functions.vector import (  # noqa: F401
-    cosine,
-    dot,
-    hamming_similarity,
-    l2_norm,
-    pack_bits,
-)

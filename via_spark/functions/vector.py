@@ -1,64 +1,67 @@
-"""Vector scalar functions over ``array<float/double>`` columns.
+"""The fixed-point dot kernel and the cosine built on it.
 
-Native higher-order functions (aggregate / zip_with / transform) —
-JVM-evaluated, no UDFs. Capability parity with the reference's Qdrant
-distance metrics: DOT (tier1, ``app/services/qdrant_service.py:51``),
-COSINE (tier2, ``app/services/qdrant_service.py:79``), and the
-binary-quantized Hamming tier (``app/services/qdrant_service.py:54-58``).
+Capability parity with the reference's Qdrant distance metrics: DOT
+(tier1, ``app/services/qdrant_service.py:51``) and COSINE (tier2,
+``app/services/qdrant_service.py:79``), reproduced EXACTLY: every
+elementwise product is floored to a BIGINT at the 1e-9 scale before
+summation, so the reduction is order-independent and Spark and DuckDB
+produce bit-identical scores however partitions reduce. The only double
+math (sqrt, division) runs on identical integer inputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _c(x: Column | str) -> Column:
-    return F.col(x) if isinstance(x, str) else x
+FIX9 = 1_000_000_000.0  # dot/norm fixed-point scale
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two equal-length numeric arrays (double)."""
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot_fix(a: str, b: str) -> Column:
+    """Fixed-point dot of the array columns named ``a`` and ``b``: each
+    elementwise double product times 1e9, floored to BIGINT, summed
+    exactly.
+
+    NULL when either array is NULL, when any element is NULL or NaN,
+    or when the arrays differ in length (``zip_with`` pads the shorter
+    side with NULLs). ±Inf is outside the contract: its product floors
+    to a BIGINT limit, and the sum then usually overflows (an
+    ARITHMETIC_OVERFLOW error under ANSI mode).
+
+    One SQL expression parsed on the JVM, not a Python-lambda
+    ``zip_with``/``aggregate`` chain: building it costs no py4j round
+    trip per lambda. Higher-order functions run interpreted (outside
+    whole-stage codegen) either way."""
+    return F.expr(
+        f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> "
+        f"floor(nanvl(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * {FIX9}D, NULL))), "
+        "0L, (acc, p) -> acc + p)"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(_c(a), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+def cosine_from_fix(dot: Column, na: Column, nb: Column) -> Column:
+    """Cosine from fixed-point dot + squared norms (scales cancel);
+    0.0 on zero norms (V3's pinned degenerate semantics)."""
+    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
+        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; 0.0 when either vector has zero norm
-    (defines V3's zero-query-vector degenerate case deterministically)."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
-
-
-def pack_bits(bits: Column | str) -> Column:
-    """Pack an array of 64 {0,1} ints into one LongType bitset (LSB-first),
-    mirroring the reference's 64-dim binary vector layout
-    (``app/services/ingestion_service.py:39``) as a single word —
-    the 'binary quantization, always-RAM' trick as a Spark column."""
-    return F.aggregate(
-        F.zip_with(
-            _c(bits),
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda b, i: F.shiftleft(b.cast("long"), i),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
-def hamming_similarity(a: Column | str, b: Column | str) -> Column:
-    """64 - popcount(a XOR b) over two packed-bit longs (F13)."""
-    return F.lit(64) - F.bit_count(_c(a).bitwiseXOR(_c(b)))
+def with_cosine(
+    df: DataFrame, a: str, b: str, out: str = "score",
+    na: str | None = None, nb: str | None = None,
+) -> DataFrame:
+    """``df`` plus ``out``, the exact cosine of array columns ``a`` and
+    ``b``. ``na``/``nb`` name squared-norm columns a caller computed
+    once per side; a norm not given is added here as ``na_fix`` /
+    ``nb_fix``. The score reads each norm twice, so the norms stay
+    columns of their own: Catalyst does not inline a costly expression
+    into a projection that reads it twice, and each dot runs once per
+    row."""
+    if na is None:
+        na = "na_fix"
+        df = df.withColumn(na, dot_fix(a, a))
+    if nb is None:
+        nb = "nb_fix"
+        df = df.withColumn(nb, dot_fix(b, b))
+    return df.withColumn(out, cosine_from_fix(dot_fix(a, b), F.col(na), F.col(nb)))

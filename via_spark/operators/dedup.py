@@ -36,7 +36,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from via_spark.functions.text import tokens
-from via_spark.operators.vector import cosine_from_fix, dot_fix, dot_fix_arrow
+from via_spark.functions.vector import dot_fix, with_cosine
+from via_spark.operators.vector import simhash_documents
 from via_spark.session import load_table, nopush, spread
 
 MINHASH_K = 8          # signature length
@@ -277,15 +278,6 @@ def incremental_minhash_pairs(
     )
 
 
-def simhashed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single source of truth for the pinned fingerprint pipeline —
-    # vector.simhash_documents (F3); keeping one copy means the pinned
-    # definition cannot silently diverge between the two call paths
-    from via_spark.operators.vector import simhash_documents
-
-    return simhash_documents(spark, sf_dir)
-
-
 # Generalized pigeonhole keys for 64-bit fingerprints (r11): the old
 # 4×16-bit block join is complete for Hamming ≤ 3, but its key space
 # is FIXED at 4·2^16 — per-key occupancy (and the quadratic-per-key
@@ -477,7 +469,7 @@ def dedup_simhash_pairs(
     duplicated verify rows (the r11 version paid up to 20 rows per
     identical pair plus a dropDuplicates exchange).
     """
-    sh = simhashed_documents(spark, sf_dir).cache()
+    sh = simhash_documents(spark, sf_dir).cache()
     packed = sh.select(
         "doc_id",
         F.shiftleft(
@@ -605,30 +597,26 @@ filter(
 
 def neardup_embedding_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = EMB_COS_THRESHOLD,
-    probe_radius: int = 1, bits: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via multi-probe sign-LSH: one
-    side explodes to its bucket's Hamming-``probe_radius`` neighborhood
-    (bits+1 keys at radius 1), the other joins on its exact bucket —
-    pairs whose buckets differ by up to ``radius`` sign bits become
-    candidates instead of being silently unseen. Still an equi-join,
-    never all-pairs. Parity with the oracle is exact because both
-    implement the same probed algorithm.
+    side explodes to its bucket's Hamming-1 neighborhood, the other
+    joins on its exact bucket — pairs whose buckets differ by one sign
+    bit become candidates instead of being silently unseen. Still an
+    equi-join, never all-pairs. Parity with the oracle is exact because
+    both implement the same probed algorithm.
 
-    ``bits`` is THE scale dial (bucket space = 2^bits): the default
-    ``None`` sizes it adaptively from the corpus count inside the plan
-    (see SIGN_TARGET_OCCUPANCY above) so per-bucket occupancy — and the
+    The bucket width ``bits`` (bucket space = 2^bits) is sized
+    adaptively from the corpus count inside the plan (see
+    SIGN_TARGET_OCCUPANCY above), so per-bucket occupancy — and the
     quadratic-per-bucket candidate volume — stays constant as the
-    corpus grows; an int pins it explicitly (the A/B dial the staged
-    density probe measured). Reference capability being scaled:
+    corpus grows. Reference capability being scaled:
     app/services/qdrant_service.py:79 (cosine near-neighbor search).
 
-    No pair dedup is needed: a candidate pair at Hamming distance d ≤
-    radius matches EXACTLY the one probe that flips its differing bit
-    set, so the explode can never emit a (vec_a, vec_b) twice —
-    property-tested (test_dedup::test_probe_join_emits_each_pair_once);
-    the r9 ``dropDuplicates`` shuffled the full candidate set for
-    nothing.
+    No pair dedup is needed: a candidate pair at Hamming distance ≤ 1
+    matches EXACTLY one directional probe, so the explode can never
+    emit a (vec_a, vec_b) twice — property-tested
+    (test_dedup_skew::test_probe_join_emits_each_pair_once); the r9
+    ``dropDuplicates`` shuffled the full candidate set for nothing.
     """
     # self-norms are per-VECTOR, so compute them once on the N-row scan
     # side, never per candidate: the 64-dim dots are higher-order-function
@@ -639,75 +627,44 @@ def neardup_embedding_pairs(
     # already-parallel cluster scan)
     e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
-    return neardup_pairs_over(e0, threshold, probe_radius, bits)
+    return neardup_pairs_over(e0, threshold)
 
 
-def neardup_pairs_over(
-    e0: DataFrame, threshold: float = EMB_COS_THRESHOLD,
-    probe_radius: int = 1, bits: int | None = None,
-) -> DataFrame:
+def neardup_pairs_over(e0: DataFrame, threshold: float = EMB_COS_THRESHOLD) -> DataFrame:
     """:func:`neardup_embedding_pairs` over a caller-supplied
     (vec_id, embedding, n_fix) frame — the store builders pass their
     exact-duplicate-collapsed representative set through the identical
     probed-LSH plan (graph.embedding_clusters_compute), so the pair
     pipeline itself never special-cases the caller."""
-    return neardup_scored_candidates(e0, probe_radius, bits).where(
-        F.col("score") >= threshold
-    )
+    return neardup_scored_candidates(e0).where(F.col("score") >= threshold)
 
 
-def neardup_scored_candidates(
-    e0: DataFrame, probe_radius: int = 1, bits: int | None = None,
-) -> DataFrame:
+def neardup_scored_candidates(e0: DataFrame) -> DataFrame:
     """Every unordered LSH candidate pair with its exact cosine,
-    PRE-threshold: (vec_a < vec_b, score). The shared verify stage of
-    :func:`neardup_pairs_over` (which adds the threshold cut) and the
-    bits-dial A/B report (which aggregates candidate volume vs kept
-    pairs per dial setting — r13 staged). Each unordered pair appears
-    exactly once by the probe construction (directional probes on the
-    adaptive path, full-neighborhood + vec_a < vec_b on the pinned-bits
-    path), so candidate counts are probe-scheme-invariant."""
-    if bits is None:
-        if probe_radius != 1:
-            raise ValueError("adaptive bits supports probe_radius=1 only")
-        e = adaptive_sign_frame(e0, ["vec_id", "embedding", "n_fix"])
-        a = e.select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
-            F.col("n_fix").alias("na_fix"),
-            F.explode(F.expr(_DIRECTIONAL_PROBES)).alias("p"),
-        ).select(
-            "vec_a", "emb_a", "na_fix",
-            F.col("p.pb").alias("bucket"), F.col("p.self").alias("is_self"),
-        )
-        b = e.select(
-            F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
-            F.col("n_fix").alias("nb_fix"), "bucket",
-        )
-        cand = a.join(b, "bucket").where(
-            (~F.col("is_self")) | (F.col("vec_a") < F.col("vec_b"))
-        )
-    else:
-        e = e0.select(
-            "vec_id", "embedding", "n_fix",
-            _sign_bucket(F.col("embedding"), dims=bits).alias("bucket"),
-        )
-        a = e.select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
-            F.col("n_fix").alias("na_fix"),
-            F.explode(
-                probe_buckets(F.col("bucket"), bits=bits, radius=probe_radius)
-            ).alias("bucket"),
-        )
-        b = e.select(
-            F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
-            F.col("n_fix").alias("nb_fix"), "bucket",
-        )
-        cand = a.join(b, "bucket").where(F.col("vec_a") < F.col("vec_b"))
+    PRE-threshold: (vec_a < vec_b, score). The verify stage of
+    :func:`neardup_pairs_over` (which adds the threshold cut). Each
+    unordered pair appears exactly once by the directional probe
+    construction, so candidate counts need no distinct."""
+    e = adaptive_sign_frame(e0, ["vec_id", "embedding", "n_fix"])
+    a = e.select(
+        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
+        F.col("n_fix").alias("na_fix"),
+        F.explode(F.expr(_DIRECTIONAL_PROBES)).alias("p"),
+    ).select(
+        "vec_a", "emb_a", "na_fix",
+        F.col("p.pb").alias("bucket"), F.col("p.self").alias("is_self"),
+    )
+    b = e.select(
+        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
+        F.col("n_fix").alias("nb_fix"), "bucket",
+    )
+    cand = a.join(b, "bucket").where(
+        (~F.col("is_self")) | (F.col("vec_a") < F.col("vec_b"))
+    )
     return (
-        cand.withColumn("d_fix", dot_fix(F.col("emb_a"), F.col("emb_b")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "emb_a", "emb_b", na="na_fix", nb="nb_fix")
         .select(
             F.least("vec_a", "vec_b").alias("vec_a"),
             F.greatest("vec_a", "vec_b").alias("vec_b"),
@@ -741,7 +698,7 @@ def incremental_embedding_pairs(
     # already-parallel cluster scan); same fix as the self-join family
     e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
     e = adaptive_sign_frame(e0, ["vec_id", "embedding", "n_fix"])
     is_batch = F.col("vec_id") % INCREMENTAL_MOD == INCREMENTAL_BATCH_RESIDUE
@@ -755,11 +712,8 @@ def incremental_embedding_pairs(
         F.col("n_fix").alias("nb_fix"), "bucket",
     )
     return (
-        batch.join(corpus, "bucket")
-        .withColumn("d_fix", dot_fix(F.col("emb_a"), F.col("emb_b")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
+        with_cosine(
+            batch.join(corpus, "bucket"), "emb_a", "emb_b", na="na_fix", nb="nb_fix"
         )
         .where(F.col("score") >= threshold)
         .select("new_vec", "corpus_vec", "score")
@@ -795,7 +749,7 @@ def gate_health_report(
     # already-parallel cluster scan); same fix as the self-join family
     e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
     e = adaptive_sign_frame(e0, ["vec_id", "embedding", "n_fix"])
     is_batch = F.col("vec_id") % INCREMENTAL_MOD == INCREMENTAL_BATCH_RESIDUE
@@ -810,13 +764,7 @@ def gate_health_report(
         if peer:
             cand = cand.where(F.col("matched_vec") < F.col("new_vec"))
         return (
-            cand.withColumn("d_fix", dot_fix(F.col("emb_a"), F.col("emb_b")))
-            .withColumn(
-                "score",
-                cosine_from_fix(
-                    F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")
-                ),
-            )
+            with_cosine(cand, "emb_a", "emb_b", na="na_fix", nb="nb_fix")
             .where(F.col("score") >= threshold)
             .select("new_vec", "score")
         )
@@ -888,7 +836,7 @@ def gate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already-parallel cluster scan); same fix as the self-join family
     e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
     e = adaptive_sign_frame(e0, ["vec_id", "embedding", "n_fix"])
     is_batch = F.col("vec_id") % INCREMENTAL_MOD == INCREMENTAL_BATCH_RESIDUE
@@ -905,19 +853,11 @@ def gate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("matched_vec"), F.col("embedding").alias("emb_b"),
         F.col("n_fix").alias("nb_fix"), "bucket",
     )
-    scored = (
-        probes.join(corpus, "bucket")
-        .unionByName(
-            probes.join(peers, "bucket").where(
-                F.col("matched_vec") < F.col("new_vec")
-            )
-        )
-        .withColumn("d_fix", dot_fix(F.col("emb_a"), F.col("emb_b")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-        )
-        .select("new_vec", "score")
+    cand = probes.join(corpus, "bucket").unionByName(
+        probes.join(peers, "bucket").where(F.col("matched_vec") < F.col("new_vec"))
+    )
+    scored = with_cosine(cand, "emb_a", "emb_b", na="na_fix", nb="nb_fix").select(
+        "new_vec", "score"
     )
     n_batch = e.agg(
         F.coalesce(F.sum(is_batch.cast("long")), F.lit(0).cast("long"))
@@ -1047,7 +987,7 @@ def ivf_assigned(e: DataFrame, n_centroids: int = IVF_CENTROIDS) -> tuple[DataFr
     w = Window.partitionBy("vec_id").orderBy(F.col("cdot").desc(), F.col("cid").asc())
     cells = (
         e.crossJoin(F.broadcast(cent))
-        .withColumn("cdot", dot_fix(F.col("embedding"), F.col("cemb")))
+        .withColumn("cdot", dot_fix("embedding", "cemb"))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select("vec_id", "label", "embedding", "cid")
@@ -1071,7 +1011,7 @@ def ann_ivf_topk(
     )
     probes = (
         cent.crossJoin(F.broadcast(q))
-        .withColumn("qdot", dot_fix(F.col("cemb"), F.col("q_emb")))
+        .withColumn("qdot", dot_fix("cemb", "q_emb"))
         .orderBy(F.col("qdot").desc(), F.col("cid").asc())
         .limit(nprobe)
         .select("cid")
@@ -1082,10 +1022,7 @@ def ann_ivf_topk(
         .crossJoin(F.broadcast(q))
     )
     return (
-        cand.withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "embedding", "q_emb")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "score")
@@ -1198,10 +1135,7 @@ def ann_lsh_topk(
         .crossJoin(F.broadcast(q.select(F.col("embedding").alias("q_emb"))))
     )
     return (
-        cand.withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "embedding", "q_emb")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "score")
@@ -1440,15 +1374,9 @@ def ann_recall_report(
     )
 
     def _scored(cand: DataFrame) -> DataFrame:
+        cand = cand.where(F.col("vec_id") != F.col("query_id"))
         return (
-            cand.where(F.col("vec_id") != F.col("query_id"))
-            .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-            .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-            .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-            .withColumn(
-                "score",
-                cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-            )
+            with_cosine(cand, "embedding", "q_emb")
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= k)
             .select("query_id", "vec_id")
@@ -1460,7 +1388,7 @@ def ann_recall_report(
     )
     probes = (
         cent.crossJoin(F.broadcast(q))
-        .withColumn("qdot", dot_fix(F.col("cemb"), F.col("q_emb")))
+        .withColumn("qdot", dot_fix("cemb", "q_emb"))
         .withColumn("_rn", F.row_number().over(wp))
         .where(F.col("_rn") <= nprobe)
         .select("query_id", "cid")
@@ -2104,7 +2032,6 @@ DENSITY_MIN_PTS = 2    # neighbors below this => semantic outlier
 def lsh_density_outliers(
     spark: SparkSession, sf_dir: str,
     tau: float = DENSITY_TAU, min_pts: int = DENSITY_MIN_PTS,
-    probe_radius: int = 1, bits: int | None = None,
 ) -> DataFrame:
     """Density-based semantic outlier labels over the embedding corpus
     (the DBSCAN core-point test, LSH-bucketed): a vector is an OUTLIER
@@ -2113,7 +2040,7 @@ def lsh_density_outliers(
     that flags mislabeled/garbage embeddings no near-DUP threshold
     catches (an outlier has no neighbors at ANY dup cut).
 
-    Candidates come from the SAME Hamming-``probe_radius`` bucket join
+    Candidates come from the SAME Hamming-1 bucket join
     as neardup_embedding_pairs — never all-pairs — so the density is
     computed over the LSH neighborhood, the deliberate scale semantics
     (a vector's true neighbors outside every probed bucket are the
@@ -2121,84 +2048,55 @@ def lsh_density_outliers(
     oracle implements the identical probed algorithm, so parity is
     exact, not approximate.
 
-    Scale posture: one embeddings scan → probe explode (bits+1 keys at
-    radius 1) → bucket equi-join → exact fixed-point verify → per-vec
-    hash agg joined back broadcast-from-agg. ``bits`` is THE scale
-    dial: the bucket space is 2^bits, so per-bucket occupancy — and
-    with it candidate volume, which is quadratic per bucket — stays
-    constant only if ``bits`` grows with log2 of the corpus (measured
-    in history/SCALEUP_STAGED_r9.json: at 10× corpus under FIXED bits the
-    candidate set grows ~100×; the dial exists precisely for that).
-    The default ``bits=None`` sizes the dial adaptively inside the plan
-    (see SIGN_TARGET_OCCUPANCY); an int pins it for A/B probes. No pair
-    dedup: each ordered candidate pair matches exactly one probe (see
+    Scale posture: one embeddings scan → directional probe explode →
+    bucket equi-join → exact fixed-point verify → per-vec hash agg
+    joined back broadcast-from-agg. The bucket space is 2^bits, so
+    per-bucket occupancy — and with it candidate volume, which is
+    quadratic per bucket — stays constant only if ``bits`` grows with
+    log2 of the corpus (measured in history/SCALEUP_STAGED_r9.json: at
+    10× corpus under FIXED bits the candidate set grows ~100×); the
+    plan sizes it adaptively (see SIGN_TARGET_OCCUPANCY). No pair
+    dedup: each candidate pair matches exactly one probe (see
     neardup_embedding_pairs).
     """
-    from via_spark.operators.vector import cosine_from_fix, dot_fix
-
     # per-vector self-norm on the scan side, never per candidate — see
     # neardup_embedding_pairs (same measured 2/3-of-verify saving);
     # spread() parallelizes the self-dot + probe explode map work off a
     # single-split scan (gated)
     e0 = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
-    if bits is None:
-        if probe_radius != 1:
-            raise ValueError("adaptive bits supports probe_radius=1 only")
-        e = adaptive_sign_frame(e0, ["vec_id", "label", "embedding", "n_fix"])
-        a = e.select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
-            F.col("n_fix").alias("na_fix"),
-            F.explode(F.expr(_DIRECTIONAL_PROBES)).alias("p"),
-        ).select(
-            "vec_a", "emb_a", "na_fix",
-            F.col("p.pb").alias("bucket"), F.col("p.self").alias("is_self"),
-        )
-    else:
-        e = e0.withColumn(
-            "bucket", _sign_bucket(F.col("embedding"), dims=bits)
-        )
-        a = e.select(
-            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
-            F.col("n_fix").alias("na_fix"),
-            F.explode(
-                probe_buckets(F.col("bucket"), bits=bits, radius=probe_radius)
-            ).alias("bucket"),
-        ).withColumn("is_self", F.lit(True))
+    e = adaptive_sign_frame(e0, ["vec_id", "label", "embedding", "n_fix"])
+    a = e.select(
+        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
+        F.col("n_fix").alias("na_fix"),
+        F.explode(F.expr(_DIRECTIONAL_PROBES)).alias("p"),
+    ).select(
+        "vec_a", "emb_a", "na_fix",
+        F.col("p.pb").alias("bucket"), F.col("p.self").alias("is_self"),
+    )
     b = e.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
         F.col("n_fix").alias("nb_fix"), "bucket",
     )
     # The candidate relation is SYMMETRIC (hamming(bucket_a, bucket_b)
-    # <= radius is direction-free and all rows share the same bits), and
-    # so is the cosine — so verify each unordered pair ONCE and credit
+    # <= 1 is direction-free and all rows share the same bits), and so
+    # is the cosine — so verify each unordered pair ONCE and credit
     # both endpoints afterwards. The per-candidate 64-dim fixed-point
     # dot is an interpreted higher-order expression (outside codegen)
-    # and dominates the 100x wall; this halves it with token-identical
-    # output, and the adaptive path additionally explodes only the
-    # DIRECTIONAL probe set (see _DIRECTIONAL_PROBES: same-bucket pairs
-    # keep vec_a < vec_b; a directed flip emits its cross-bucket pair
-    # exactly once in either orientation) (r13, VERDICT r12 next #3).
-    # dot_fix_arrow here (r15): paired A/B ×0.71 at sf0.1, ~neutral at
-    # the 100× dial — this query's candidate frame is the densest of
-    # the family. The sibling sites (neardup/incremental/gate) were
-    # A/B'd with the same swap and measured SLOWER at both scales
-    # (×1.4 sf0.1, ×1.37 dial for incremental — the fixed Python
-    # round trip outweighs their smaller pair volume), so they keep
-    # the native expression: measured per site, not assumed.
-    neighbor_ends = (
+    # and dominates the 100x wall; the DIRECTIONAL probe set (see
+    # _DIRECTIONAL_PROBES: same-bucket pairs keep vec_a < vec_b; a
+    # directed flip emits its cross-bucket pair exactly once in either
+    # orientation) halves it with token-identical output (r13).
+    cand = (
         a.join(b, "bucket")
-        .where(
-            (~F.col("is_self")) | (F.col("vec_a") < F.col("vec_b"))
-        )
+        .where((~F.col("is_self")) | (F.col("vec_a") < F.col("vec_b")))
         .where(F.col("vec_a") != F.col("vec_b"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("emb_a"), F.col("emb_b")))
-        .where(
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix"))
-            >= F.lit(tau)
-        )
+    )
+    neighbor_ends = (
+        with_cosine(cand, "emb_a", "emb_b", na="na_fix", nb="nb_fix")
+        .where(F.col("score") >= F.lit(tau))
         .select(F.explode(F.array("vec_a", "vec_b")).alias("vec"))
     )
     counts = neighbor_ends.groupBy(F.col("vec").alias("vec_a")).agg(
@@ -2278,24 +2176,16 @@ def neardup_lsh_recall_report(
     # would serialize them (gated, no-op on a parallel cluster scan).
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("nb_fix"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     s = e.where(F.col("vec_id") < sample_n).select(
         F.col("vec_id").alias("s_id"), F.col("embedding").alias("s_emb"),
         F.col("nb_fix").alias("na_fix"),
     )
-    # dot_fix_arrow, not dot_fix, for the pair-grain dots: |corpus| ×
-    # |sample| evaluations of an interpreted HOF were the measured wall
-    # of this query (r14); the Arrow twin computes bit-identical BIGINTs
-    # in numpy (guide §4.2).
+    cand = e.crossJoin(F.broadcast(s)).where(F.col("vec_id") != F.col("s_id"))
     truth = (
-        e.crossJoin(F.broadcast(s))
-        .where(F.col("vec_id") != F.col("s_id"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("s_emb"), F.col("embedding")))
-        .where(
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix"))
-            >= F.lit(threshold)
-        )
+        with_cosine(cand, "s_emb", "embedding", na="na_fix", nb="nb_fix")
+        .where(F.col("score") >= F.lit(threshold))
         .select(
             F.least("s_id", "vec_id").alias("vec_a"),
             F.greatest("s_id", "vec_id").alias("vec_b"),

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from via_spark.functions.embed import EMBED_DIM, token_dim
 from via_spark.functions.text import tokens
+from via_spark.functions.vector import cosine_from_fix
 from via_spark.operators import promote, rhythm
 
 # default tier2-building variant: sensitive novelty detection so the
@@ -127,8 +128,10 @@ def _scored(cand: DataFrame, query: DataFrame, score: str = "score") -> DataFram
 
     ``dot = Σ_tokens q[dim]`` and ``n2 = Σ_dim tf²`` are exact BIGINT
     folds over the row's own dims; doubles appear only in the final
-    cosine, written as the DuckDB oracles write it, so scores are
-    bit-identical. A zero dot (an all-zero query too) scores 0.0."""
+    ``cosine_from_fix``, the same division the DuckDB oracles run on
+    the same integers, so scores are bit-identical. A zero dot scores
+    0.0 in both: the oracles test the dot, ``cosine_from_fix`` the
+    norms, and a zero norm forces a zero dot."""
     zero = F.lit(0).cast("long")
     dims = F.col("_dims")
     dot = F.aggregate(dims, zero, lambda a, d: a + F.col("_q")[d])
@@ -154,10 +157,7 @@ def _scored(cand: DataFrame, query: DataFrame, score: str = "score") -> DataFram
         .select(*cand.columns, dot.alias("_dot"), n2.alias("_n2"), "_qn2")
         .select(
             *cand.columns,
-            F.when(F.col("_dot") == 0, F.lit(0.0)).otherwise(
-                F.col("_dot").cast("double")
-                / (F.sqrt(F.col("_n2").cast("double")) * F.sqrt(F.col("_qn2").cast("double")))
-            ).alias(score),
+            cosine_from_fix(F.col("_dot"), F.col("_n2"), F.col("_qn2")).alias(score),
         )
     )
 

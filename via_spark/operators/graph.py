@@ -279,7 +279,7 @@ def embedding_clusters_compute(
     family are equal member-to-member).
     """
     from via_spark.operators.dedup import EMB_COS_THRESHOLD, neardup_pairs_over
-    from via_spark.operators.vector import dot_fix
+    from via_spark.functions.vector import dot_fix
 
     threshold = EMB_COS_THRESHOLD if threshold is None else threshold
     # spread(): the self-dot + (downstream) probe explode are per-row-
@@ -287,7 +287,7 @@ def embedding_clusters_compute(
     # no-op on an already-parallel cluster scan)
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("n_fix"),
+        dot_fix("embedding", "embedding").alias("n_fix"),
     )
     nz = e.where(F.col("n_fix") > 0)
     # family rep = min vec_id per identical embedding, carried OUT of

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from via_spark.functions.text import tokens
-from via_spark.operators.vector import cosine_from_fix, dot_fix
+from via_spark.functions.vector import dot_fix, with_cosine
 from via_spark.session import load_table, spread
 
 K1 = 1.2
@@ -192,20 +192,17 @@ def hybrid_rrf(
     # the 1-row broadcast side instead of re-deriving it per corpus row
     q = emb.where(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"),
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("nb_fix"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
 
     joined = (
         bm25_scored(docs, terms)
         .join(emb, F.col("doc_id") == F.col("vec_id"))
         .crossJoin(F.broadcast(q))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn(
-            "dense_score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix"))
-        )
     )
-    cand = joined.select("doc_id", "score_fix", "dense_score")
+    cand = with_cosine(joined, "embedding", "q_emb", out="dense_score", nb="nb_fix").select(
+        "doc_id", "score_fix", "dense_score"
+    )
     ranks = _dual_ranks(cand, cut_n)
     contrib = lambda c: F.coalesce(  # noqa: E731 — absent side contributes 0
         F.lit(1.0) / (F.lit(RRF_K) + F.col(c)), F.lit(0.0)
@@ -323,19 +320,15 @@ def ranker_overlap_report(
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"),
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("nb_fix"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
-    cand = (
+    joined = (
         bm25_scored(docs, terms)
         .join(emb, F.col("doc_id") == F.col("vec_id"))
         .crossJoin(F.broadcast(q))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn(
-            "dense_score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-        )
-        .select("doc_id", "score_fix", "dense_score")
+    )
+    cand = with_cosine(joined, "embedding", "q_emb", out="dense_score", nb="nb_fix").select(
+        "doc_id", "score_fix", "dense_score"
     )
     ranks = _dual_ranks(cand, cut_n)
     cuts = F.explode(

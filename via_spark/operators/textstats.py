@@ -1396,7 +1396,7 @@ def simhash_bit_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrades dedup_simhash_pairs recall. 64 output rows.
 
     Scale posture: rides the session-cached fingerprint frame
-    (``dedup.simhashed_documents`` — the same one every Hamming-family
+    (``vector.simhash_documents`` — the same one every Hamming-family
     query shares) instead of re-running the sha256 vote aggregation:
     bit b of a fingerprint is exactly (vote_b >= 0), which is exactly
     nibble-bit b of the hex rendering, so decoding 64 bits from the
@@ -1406,9 +1406,9 @@ def simhash_bit_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded (simhash_documents drops them), mirroring the oracle's
     token-derived CTE.
     """
-    from via_spark.operators.dedup import simhashed_documents
+    from via_spark.operators.vector import simhash_documents
 
-    sh = simhashed_documents(spark, sf_dir).cache()
+    sh = simhash_documents(spark, sf_dir).cache()
     # 64-bit array from the hex: bit b = (nibble(b//4) >> (b%4)) & 1 —
     # one F.expr parse (the r12 build-time pattern)
     bits_sql = "array(" + ", ".join(

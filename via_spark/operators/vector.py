@@ -38,102 +38,15 @@ from pyspark.sql import functions as F
 
 from via_spark.functions.simhash import simhash_hex_arrow
 from via_spark.functions.text import tokens
+from via_spark.functions.vector import FIX9, cosine_from_fix, dot_fix, with_cosine
 from via_spark.session import load_table, spread
 
-FIX9 = 1_000_000_000.0  # dot/norm fixed-point scale (knn)
 FIX6 = 1_000_000.0      # per-element scale for recommend's rational query vector
-
-
-def dot_fix(a: Column, b: Column, scale: float = FIX9) -> Column:
-    """Order-independent fixed-point dot product: each elementwise
-    product floored to BIGINT at ``scale``, summed exactly."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(scale)).cast("long")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def cosine_from_fix(dot: Column, na: Column, nb: Column) -> Column:
-    """Cosine from fixed-point dot + squared norms (scales cancel);
-    0.0 on zero norms (V3's pinned degenerate semantics)."""
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
-    )
-
-
-_FIXDOT_PD = None
-
-
-def dot_fix_arrow(a: Column, b: Column) -> Column:
-    """Arrow-vectorized twin of :func:`dot_fix` at the FIX9 scale —
-    bit-identical values, ~10× less per-pair cost on large pair frames.
-
-    :func:`dot_fix` is a higher-order-function chain (zip_with +
-    aggregate), which Spark evaluates INTERPRETED per element; on a
-    sample×corpus truth side (|corpus|·|sample| pairs × 64 dims) that
-    interpreter is the measured wall. This twin ships the two array
-    columns as Arrow batches and runs the identical arithmetic in
-    numpy (guide §4.2): float64 multiply is the same IEEE-754 binary64
-    operation the JVM executes, the ×1e9 scaling and per-element floor
-    happen in the same order on the same doubles, and the final sum is
-    exact int64 on both sides — so every output BIGINT matches the
-    native expression (pinned by tests/test_dedup.py's parity test and
-    every consumer's DuckDB oracle).
-
-    Contract: equal-length, non-null arrays (the embeddings fixture
-    shape). Keep :func:`dot_fix` for low-volume frames — one ArrowEval
-    stage costs a Python round trip that only pays for itself when the
-    pair count is large.
-    """
-    global _FIXDOT_PD
-    if _FIXDOT_PD is None:
-        # module-global binding: the UDF's `pd.Series` type hints are
-        # PEP-563 strings (future annotations) that pyspark resolves
-        # against this module's globals at decoration time
-        global np, pd
-        import numpy as np
-        import pandas as pd
-
-        @F.pandas_udf("long")
-        def _fixdot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            if len(xs) == 0:
-                return pd.Series([], dtype="int64")
-            try:
-                av = np.array(list(xs), dtype="float64")
-                bv = np.array(list(ys), dtype="float64")
-            except (TypeError, ValueError) as exc:  # ragged / null element
-                raise ValueError(
-                    "dot_fix_arrow contract violation: embeddings must be "
-                    "equal-length non-null float arrays (got a ragged or "
-                    "null-element batch) — use native dot_fix for frames "
-                    "that can carry NULL/ragged vectors"
-                ) from exc
-            prod = av * bv * FIX9
-            if np.isnan(prod).any():  # NULL element or NaN input (ADVICE r14 #2)
-                raise ValueError(
-                    "dot_fix_arrow contract violation: NULL/NaN element in "
-                    "an embedding pair — native dot_fix yields NULL here; "
-                    "this Arrow twin only serves non-null fixture-shaped "
-                    "pair frames"
-                )
-            return pd.Series(np.floor(prod).astype("int64").sum(axis=1))
-
-        _FIXDOT_PD = _fixdot
-    return _FIXDOT_PD(a, b)
 
 
 def _scored(e: DataFrame, query_id: int) -> DataFrame:
     q = e.where(F.col("vec_id") == query_id).select(F.col("embedding").alias("q_emb"))
-    return (
-        e.crossJoin(F.broadcast(q))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
-    )
+    return with_cosine(e.crossJoin(F.broadcast(q)), "embedding", "q_emb")
 
 
 def knn_cosine_topk(
@@ -202,10 +115,7 @@ def ann_quantized_topk(
         .limit(oversample * k)
     )
     return (
-        cand.withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "embedding", "q_emb")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "qdot", "score")
@@ -366,13 +276,9 @@ def knn_batch_topk(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
+    cand = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("query_id"))
     return (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "embedding", "q_emb")
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "vec_id", "label", "rank", "score")
@@ -389,7 +295,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the exact sum, so parity is bit-for-bit.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    n2 = dot_fix(F.col("embedding"), F.col("embedding"))
+    n2 = dot_fix("embedding", "embedding")
     return (
         e.select("label", n2.alias("n2_fix"))
         .groupBy("label")
@@ -578,16 +484,9 @@ def hard_negatives(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("vec_id").asc()
     )
+    cand = e.crossJoin(F.broadcast(q)).where(F.col("label") != F.col("query_label"))
     return (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col("label") != F.col("query_label"))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("q_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("q_emb"), F.col("q_emb")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-        )
+        with_cosine(cand, "embedding", "q_emb")
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "query_label", "vec_id", "label", "rank", "score")
@@ -628,25 +527,21 @@ def matryoshka_recall_report(
         F.col("score").desc(), F.col("vec_id").asc()
     )
 
-    def _topk(emb: Column, q_emb: Column) -> DataFrame:
+    def _topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+        cand = corpus.crossJoin(F.broadcast(queries)).where(
+            F.col("vec_id") != F.col("query_id")
+        )
         return (
-            e.crossJoin(F.broadcast(q))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .withColumn("d_fix", dot_fix(emb, q_emb))
-            .withColumn("na_fix", dot_fix(emb, emb))
-            .withColumn("nb_fix", dot_fix(q_emb, q_emb))
-            .withColumn(
-                "score",
-                cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")),
-            )
+            with_cosine(cand, "embedding", "q_emb")
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= k)
             .select("query_id", "vec_id")
         )
 
-    exact = _topk(F.col("embedding"), F.col("q_emb"))
+    exact = _topk(e, q)
     trunc = _topk(
-        F.slice(F.col("embedding"), 1, d), F.slice(F.col("q_emb"), 1, d)
+        e.withColumn("embedding", F.slice("embedding", 1, d)),
+        q.withColumn("q_emb", F.slice("q_emb", 1, d)),
     )
     overlap = exact.join(trunc, ["query_id", "vec_id"]).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_overlap")
@@ -897,16 +792,7 @@ def _semdedup_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     each vector's own bucket (equi-join on bkt — ONE bucket's ≤ kk
     centroids per vector, never the global k1 crossJoin); ties break
     to the lowest centroid id (pinned, engine-stable)."""
-    s = (
-        e.join(F.broadcast(cents), "bkt")
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("c")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nc_fix", dot_fix(F.col("c"), F.col("c")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nc_fix")),
-        )
-    )
+    s = with_cosine(e.join(F.broadcast(cents), "bkt"), "embedding", "c")
     w = Window.partitionBy("vec_id").orderBy(
         F.col("score").desc(), F.col("cid").asc()
     )
@@ -1002,15 +888,11 @@ def _semdedup_subsplit(assigned: DataFrame, kn: DataFrame) -> DataFrame:
             (F.col("rn") - 1).alias("scid"),
             F.transform("embedding", lambda x: x.cast("double")).alias("sc"),
         )
-        .withColumn("nsc_fix", dot_fix(F.col("sc"), F.col("sc")))
+        .withColumn("nsc_fix", dot_fix("sc", "sc"))
     )
-    s = (
-        assigned.join(F.broadcast(subs), ["bkt", "cid"])
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("sc")))
-        .withColumn(
-            "score",
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nsc_fix")),
-        )
+    s = with_cosine(
+        assigned.join(F.broadcast(subs), ["bkt", "cid"]), "embedding", "sc",
+        na="na_fix", nb="nsc_fix",
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("score").desc(), F.col("scid").asc()
@@ -1102,15 +984,14 @@ def semdedup_compute(spark: SparkSession, sf_dir: str,
     # the cell equi-join leaves only k1·k2 distinct keys — rebalance
     # the BOUNDED candidate-pair set across all cores before the
     # per-pair dot (round-robin on pair identity, not a keyed shuffle)
-    dup = (
+    pairs = (
         a.join(b, cell)
         .where(F.col("va") < F.col("vb"))
         .repartition(F.col("va"), F.col("vb"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("emb_a"), F.col("emb_b")))
-        .where(
-            cosine_from_fix(F.col("d_fix"), F.col("norm_a"), F.col("norm_b"))
-            >= tau
-        )
+    )
+    dup = (
+        with_cosine(pairs, "emb_a", "emb_b", na="norm_a", nb="norm_b")
+        .where(F.col("score") >= tau)
         .select("vb")
         .distinct()
     )
@@ -1224,26 +1105,18 @@ def semdedup_containment_report(
     # per-SIDE norm precompute — see neardup_lsh_recall_report (r12):
     # dot_fix is an interpreted HOF; self-norms per candidate row were
     # |sample|×/|corpus|× redundant. Same values, 3× fewer HOF evals.
-    # The pair-grain dots use dot_fix_arrow (bit-identical numpy twin,
-    # guide §4.2) — |corpus|·|sample| interpreted HOF evaluations were
-    # the measured wall of this query (r14); spread() keeps the pair
-    # map stage off a single-split scan (gated).
+    # spread() keeps the pair map stage off a single-split scan (gated).
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding",
-        dot_fix(F.col("embedding"), F.col("embedding")).alias("nb_fix"),
+        "vec_id", "embedding", dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     s = e.where(F.col("vec_id") < sample_n).select(
         F.col("vec_id").alias("s_id"), F.col("embedding").alias("s_emb"),
         F.col("nb_fix").alias("na_fix"),
     )
+    cand = e.crossJoin(F.broadcast(s)).where(F.col("vec_id") != F.col("s_id"))
     truth = (
-        e.crossJoin(F.broadcast(s))
-        .where(F.col("vec_id") != F.col("s_id"))
-        .withColumn("d_fix", dot_fix_arrow(F.col("s_emb"), F.col("embedding")))
-        .where(
-            cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix"))
-            >= F.lit(tau)
-        )
+        with_cosine(cand, "s_emb", "embedding", na="na_fix", nb="nb_fix")
+        .where(F.col("score") >= F.lit(tau))
         .select(
             F.least("s_id", "vec_id").alias("vec_a"),
             F.greatest("s_id", "vec_id").alias("vec_b"),
@@ -1451,11 +1324,9 @@ def quantization_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per = (
         e.withColumn("maxabs", maxabs)
-        .withColumn("norm_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn(
-            "err_fix",
-            F.when(F.col("maxabs") > 0, dot_fix(resid, resid)),
-        )
+        .withColumn("norm_fix", dot_fix("embedding", "embedding"))
+        .withColumn("resid", F.when(F.col("maxabs") > 0, resid))
+        .withColumn("err_fix", dot_fix("resid", "resid"))
         .select(
             "vec_id",
             "label",
@@ -1503,13 +1374,9 @@ def semantic_contamination(
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cos").desc(), F.col("bench_id").asc()
     )
+    cand = e.where(F.col("vec_id") >= bench_max_id).crossJoin(F.broadcast(bench))
     return (
-        e.where(F.col("vec_id") >= bench_max_id)
-        .crossJoin(F.broadcast(bench))
-        .withColumn("d_fix", dot_fix(F.col("embedding"), F.col("b_emb")))
-        .withColumn("na_fix", dot_fix(F.col("embedding"), F.col("embedding")))
-        .withColumn("nb_fix", dot_fix(F.col("b_emb"), F.col("b_emb")))
-        .withColumn("cos", cosine_from_fix(F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")))
+        with_cosine(cand, "embedding", "b_emb", out="cos")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(

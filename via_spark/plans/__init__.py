@@ -10,26 +10,9 @@ refactor that silently turns a pruned scan into a full scan fails CI.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
     """The physical plan string (post-AQE wrapper, pre-execution)."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters lists that reach file scans."""
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", executed_plan(df))
-
-
-def partition_filters(df: DataFrame) -> list[str]:
-    return re.findall(r"PartitionFilters: \[([^\]]*)\]", executed_plan(df))
-
-
-def has_operator(df: DataFrame, marker: str) -> bool:
-    """True if the physical plan contains the operator marker, e.g.
-    'BroadcastHashJoin', 'TakeOrderedAndProject', 'WindowGroupLimit'."""
-    return marker in executed_plan(df)

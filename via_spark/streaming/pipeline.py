@@ -692,7 +692,7 @@ def embedding_gate_process_batch(
         _sign_bucket,
         probe_buckets,
     )
-    from via_spark.operators.vector import cosine_from_fix, dot_fix
+    from via_spark.functions.vector import dot_fix, with_cosine
 
     thr = EMB_COS_THRESHOLD if threshold is None else threshold
 
@@ -703,9 +703,7 @@ def embedding_gate_process_batch(
 
     batch = (
         batch_df.select("vec_id", "embedding")
-        .withColumn(
-            "n_fix", dot_fix(F.col("embedding"), F.col("embedding"))
-        )
+        .withColumn("n_fix", dot_fix("embedding", "embedding"))
         .withColumn(
             "b_wide", _sign_bucket(F.col("embedding"), dims=MAX_SIGN_BITS)
         )
@@ -759,13 +757,7 @@ def embedding_gate_process_batch(
     flagged = None
     for c in cands:
         f_ = (
-            c.withColumn("d_fix", dot_fix(F.col("emb_a"), F.col("emb_b")))
-            .withColumn(
-                "score",
-                cosine_from_fix(
-                    F.col("d_fix"), F.col("na_fix"), F.col("nb_fix")
-                ),
-            )
+            with_cosine(c, "emb_a", "emb_b", na="na_fix", nb="nb_fix")
             .where(F.col("score") >= thr)
             .select("vec_id", "matched_vec", "score")
         )
