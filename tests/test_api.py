@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from via_spark.api import VIAEngine
+from via_spark.operators import rhythm
 
 WINDOW = 300
 NOW = 10_000
@@ -93,6 +94,8 @@ def test_planted_anomalies_detected_exactly(engine):
     )
     # steady login traffic must NOT be flagged
     assert not any("login" in a["body"] for a in novel + freq)
+    # the verb returns the anomaly rows only, not their tier2 clusters
+    assert all(tuple(a) == rhythm.ANOMALY_COLUMNS for a in novel + freq)
 
 
 def test_suppress_then_reanalyze(engine):
@@ -458,3 +461,42 @@ def test_triage_matches_oracle_on_edge_marks(spark, tmp_path):
     assert got == oracle(pos, neg)
     assert [r[0] for r in got] == ["h_c", "h_d", "h_f", "h_g", "h_h", "h_i"]
     assert all(r[-1] == 0.0 for r in got)
+
+
+def test_forensic_builders_make_no_python_lambda(spark, tmp_path, monkeypatch):
+    """Text search and triage build their tokenizer, dims, query vector
+    and scoring fold as SQL strings: no Python lambda (each one costs
+    py4j round trips at every build)."""
+    import pyspark.sql.functions.builtin as builtin
+
+    from via_spark.operators import promote
+
+    def no_lambda(f):
+        raise AssertionError("built a Python lambda")
+
+    rows = _tier2_rows({"h_a": "disk full", "h_b": "disk error", "h_c": "user login"})
+    eng = VIAEngine(spark, str(tmp_path / "store"))
+    promote.write_tier2(spark.createDataFrame(rows, promote.TIER2_SCHEMA), eng.tier2_path)
+    monkeypatch.setattr(builtin, "_create_lambda", no_lambda)
+    search = eng.tier2_clusters(text_filter="disk")
+    triage = eng.tier2_triage(["h_a"])
+    monkeypatch.undo()
+    assert search.count() == 2 and triage.count() == 2
+
+
+def test_tokens_sql_matches_tokens(spark):
+    """The SQL-text tokenizer the forensic folds use is the pinned
+    ``tokens``: same arrays on runs of mixed whitespace, leading and
+    trailing blanks, the letter s (a lost regex escape splits on it),
+    an all-blank string and NULL."""
+    from via_spark.functions.text import tokens, tokens_sql
+
+    texts = ["Disk full  on\tnode ", "  sss ss s ", "", "   ", "A\nB", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, text string")
+    got = df.select(
+        "id", tokens("text").alias("a"), F.expr(tokens_sql("text")).alias("b")
+    ).orderBy("id").collect()
+    assert [r["a"] for r in got] == [r["b"] for r in got]
+    assert [r["a"] for r in got] == [
+        ["disk", "full", "on", "node"], ["sss", "ss", "s"], [], [], ["a", "b"], None,
+    ]

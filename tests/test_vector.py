@@ -768,6 +768,19 @@ def test_dot_sites_plan_no_python_eval(spark, sf_oracle):
         assert "ArrowEvalPython" not in executed_plan(fn(spark, sf_oracle)), fn.__name__
 
 
+def test_broadcast_query_norm_computed_on_query_side(spark, sf_oracle):
+    """At a broadcast-query site the query's squared norm is projected on
+    the query frame before the broadcast: above the cross join each
+    candidate row evaluates two dots (its own norm and the pair's),
+    not three."""
+    from via_spark.operators import vector
+
+    plan = vector.knn_batch_topk(spark, sf_oracle)._jdf.queryExecution().optimizedPlan().toString()
+    above, below = plan.split("Join Cross", 1)
+    assert above.count("zip_with") == 2
+    assert below.count("zip_with") == 1
+
+
 def test_semdedup_survives_null_element(spark, tmp_path):
     """One NULL element in one vector does not fail the SemDeDup build:
     that vector's cosines are NULL, so it is never marked a duplicate

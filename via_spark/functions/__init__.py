@@ -1,6 +1,6 @@
 """Column-expression library (all JVM-native, whole-stage-codegen friendly)."""
 
-from via_spark.functions.embed import token_dim  # noqa: F401
+from via_spark.functions.embed import token_dim_sql  # noqa: F401
 from via_spark.functions.simhash import (  # noqa: F401
     hamming_hex,
     simhash_hex,

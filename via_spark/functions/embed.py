@@ -6,7 +6,7 @@ Capability parity with the reference's dense embedding step
 ``app/core/config.py:27``, ``app/services/qdrant_service.py:22-26,123``):
 two implementations behind one interface (SURVEY.md §7.4 decision 5):
 
-* ``token_dim`` — the deterministic embedder of the forensic queries
+* ``token_dim_sql`` — the deterministic embedder of the forensic queries
   (mirrored by their DuckDB oracles): a hashing-trick bag-of-tokens
   embedding.
   Each token maps to dimension ``conv(sha256(token)[:3], 16, 10) % 384``
@@ -34,10 +34,11 @@ from pyspark.sql import functions as F
 EMBED_DIM = 384
 
 
-def token_dim(t: Column, dim: int = EMBED_DIM) -> Column:
-    """Deterministic hashing-trick dimension for one token:
-    first 12 bits of sha256(token), mod ``dim``."""
-    return (F.conv(F.substring(F.sha2(t, 256), 1, 3), 16, 10).cast("int") % dim)
+def token_dim_sql(t: str, dim: int = EMBED_DIM) -> str:
+    """Deterministic hashing-trick dimension for one token, as SQL text
+    over the SQL expression ``t``: first 12 bits of sha256(token), mod
+    ``dim``."""
+    return f"CAST(conv(substring(sha2({t}, 256), 1, 3), 16, 10) AS INT) % {dim}"
 
 
 def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
@@ -47,7 +48,7 @@ def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
     ``app/services/qdrant_service.py:22-26``) is importable, this
     returns a real encoder loaded ONCE per Python worker. In containers
     without the runtime it raises NotImplementedError; the
-    deterministic ``token_dim`` embedding is the engine's
+    deterministic ``token_dim_sql`` embedding is the engine's
     always-testable embedder and the Arrow batching shell is proven
     with an injected fake encoder either way.
     tests/test_vector.py::test_dense_embedded_production_model runs the
@@ -59,7 +60,7 @@ def _load_model_encoder(model_name: str = "BAAI/bge-small-en-v1.5"):
         raise NotImplementedError(
             f"dense embedding ({model_name}) requires the fastembed/ONNX "
             "runtime, not present in this container; use "
-            "token_dim or inject an encoder into "
+            "token_dim_sql or inject an encoder into "
             "dense_embedded()"
         ) from exc
     model = TextEmbedding(model_name)

@@ -62,4 +62,12 @@ def tokens(text: Column | str) -> Column:
     (deterministic, SQL-expressible — see SURVEY.md §7.4 decision 3).
     """
     col = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
+    return F.array_remove(F.split(F.lower(col), r"\s+"), "")
+
+
+def tokens_sql(text: str) -> str:
+    r""":func:`tokens` as SQL text over the SQL expression ``text``, for
+    higher-order functions written as one SQL string. The regex literal
+    is escaped once more for the SQL parser (``'\\s+'`` parses to the
+    regex ``\s+``)."""
+    return rf"array_remove(split(lower({text}), '\\s+'), '')"

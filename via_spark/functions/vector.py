@@ -32,19 +32,32 @@ def dot_fix(a: str, b: str) -> Column:
     ``zip_with``/``aggregate`` chain: building it costs no py4j round
     trip per lambda. Higher-order functions run interpreted (outside
     whole-stage codegen) either way."""
-    return F.expr(
+    return F.expr(_dot_sql(a, b))
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
         f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> "
         f"floor(nanvl(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * {FIX9}D, NULL))), "
         "0L, (acc, p) -> acc + p)"
     )
 
 
-def cosine_from_fix(dot: Column, na: Column, nb: Column) -> Column:
-    """Cosine from fixed-point dot + squared norms (scales cancel);
-    0.0 on zero norms (V3's pinned degenerate semantics)."""
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
+def cosine_sql(dot: str, na: str, nb: str) -> str:
+    """SQL text of the cosine from a fixed-point dot and the two squared
+    norms, each given as SQL text (scales cancel); 0.0 on zero norms
+    (V3's pinned degenerate semantics). ``na`` and ``nb`` each appear
+    twice, so pass column names or lambda fields, not folds."""
+    return (
+        f"CASE WHEN ({na}) = 0 OR ({nb}) = 0 THEN 0D "
+        f"ELSE CAST({dot} AS DOUBLE) / "
+        f"(sqrt(CAST({na} AS DOUBLE)) * sqrt(CAST({nb} AS DOUBLE))) END"
     )
+
+
+def cosine_from_fix(dot: str, na: str, nb: str) -> Column:
+    """:func:`cosine_sql` as a column."""
+    return F.expr(cosine_sql(dot, na, nb))
 
 
 def with_cosine(
@@ -64,4 +77,4 @@ def with_cosine(
     if nb is None:
         nb = "nb_fix"
         df = df.withColumn(nb, dot_fix(b, b))
-    return df.withColumn(out, cosine_from_fix(dot_fix(a, b), F.col(na), F.col(nb)))
+    return df.withColumn(out, cosine_from_fix(_dot_sql(a, b), f"`{na}`", f"`{nb}`"))

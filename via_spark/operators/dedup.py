@@ -1007,7 +1007,8 @@ def ann_ivf_topk(
     e = load_table(spark, sf_dir, "embeddings")
     cent, cells = ivf_assigned(e, n_centroids)
     q = e.where(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("q_emb")
+        F.col("embedding").alias("q_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     probes = (
         cent.crossJoin(F.broadcast(q))
@@ -1022,7 +1023,7 @@ def ann_ivf_topk(
         .crossJoin(F.broadcast(q))
     )
     return (
-        with_cosine(cand, "embedding", "q_emb")
+        with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "score")
@@ -1132,10 +1133,13 @@ def ann_lsh_topk(
         exploded.join(F.broadcast(probes), ["tbl", "bkey"], "left_semi")
         .where(F.col("vec_id") != query_id)
         .dropDuplicates(["vec_id"])
-        .crossJoin(F.broadcast(q.select(F.col("embedding").alias("q_emb"))))
+        .crossJoin(F.broadcast(q.select(
+            F.col("embedding").alias("q_emb"),
+            dot_fix("embedding", "embedding").alias("nb_fix"),
+        )))
     )
     return (
-        with_cosine(cand, "embedding", "q_emb")
+        with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "score")
@@ -1367,7 +1371,9 @@ def ann_recall_report(
     e = load_table(spark, sf_dir, "embeddings")
     cent, cells = ivf_assigned(e, n_centroids)
     q = e.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("vec_id").asc()
@@ -1376,7 +1382,7 @@ def ann_recall_report(
     def _scored(cand: DataFrame) -> DataFrame:
         cand = cand.where(F.col("vec_id") != F.col("query_id"))
         return (
-            with_cosine(cand, "embedding", "q_emb")
+            with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= k)
             .select("query_id", "vec_id")

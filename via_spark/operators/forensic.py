@@ -31,7 +31,9 @@ literal text (one-row relation) or from one global aggregate over the
 example rows (triage) — and broadcasts it; each candidate row is scored
 where it lies by folding its own token dims against it (no explode, no
 shuffle on ``(hash, dim)``, no join on ``dim``): a sort of the row's
-dims and two linear folds, O(t log t) in its t tokens. The only
+dims and one linear fold, O(t log t) in its t tokens. The tokenizer,
+dims, query vector and fold are SQL strings, so a build makes no
+Python lambda. The only
 shuffle left is the per-hash canonical dedup; the top-k cut is a heap.
 Nothing here collects to the driver.
 """
@@ -40,12 +42,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from via_spark.functions.embed import EMBED_DIM, token_dim
-from via_spark.functions.text import tokens
-from via_spark.functions.vector import cosine_from_fix
+from via_spark.functions.embed import EMBED_DIM, token_dim_sql
+from via_spark.functions.text import tokens, tokens_sql
+from via_spark.functions.vector import cosine_sql
 from via_spark.operators import promote, rhythm
 
 # default tier2-building variant: sensitive novelty detection so the
@@ -92,73 +94,64 @@ def _canonical_per_hash(c: DataFrame) -> DataFrame:
     )
 
 
-def _dims(text: Column) -> Column:
-    """Hashing-trick dimension of every token of ``text``, in token
-    order (a dim repeats once per occurrence: its tf)."""
-    return F.transform(tokens(text), lambda t: token_dim(t))
+def _dims(text: str) -> str:
+    """SQL text: the hashing-trick dimension of every token of the text
+    column ``text``, in token order (a dim repeats once per occurrence:
+    its tf)."""
+    return f"transform({tokens_sql(f'`{text}`')}, t -> {token_dim_sql('t')})"
 
 
 def _query(rel: DataFrame) -> DataFrame:
     """One-row query frame from a one-row ``rel`` whose ``_p`` holds
     (d, c) pairs — dim ``d`` gains weight ``c``: ``_q`` is the dense
     EMBED_DIM BIGINT weight vector, ``_qn2`` its squared norm."""
-    zero = F.lit(0).cast("long")
-    q = F.transform(
-        F.sequence(F.lit(0), F.lit(EMBED_DIM - 1)),
-        lambda i: F.aggregate(
-            F.col("_p"), zero,
-            lambda a, p: a + F.when(p["d"] == i, p["c"]).otherwise(zero),
-        ),
+    q = (
+        f"transform(sequence(0, {EMBED_DIM - 1}), i -> "
+        "aggregate(_p, 0L, (a, p) -> a + IF(p.d = i, p.c, 0L)))"
     )
-    return rel.select(q.alias("_q")).select(
-        "_q", F.aggregate("_q", zero, lambda a, x: a + x * x).alias("_qn2")
+    return rel.select(F.expr(q).alias("_q")).select(
+        "_q", F.expr("aggregate(_q, 0L, (a, x) -> a + x * x)").alias("_qn2")
     )
 
 
 def _text_query(spark: SparkSession, text: str) -> DataFrame:
     """The query frame of a literal text (each token weighs 1)."""
-    one = F.lit(1).cast("long")
-    pairs = F.transform(_dims(F.lit(text)), lambda d: F.struct(d.alias("d"), one.alias("c")))
-    return _query(spark.range(1, numPartitions=1).select(pairs.alias("_p")))
+    pairs = F.expr(f"transform({_dims('_text')}, d -> named_struct('d', d, 'c', 1L))")
+    return _query(
+        spark.range(1, numPartitions=1)
+        .select(F.lit(text).alias("_text"))
+        .select(pairs.alias("_p"))
+    )
+
+
+# One fold over the row's sorted dims: ``dot = Σ_tokens q[dim]`` and
+# ``n = Σ_dim tf²`` (the r-th token of a run of equal dims adds
+# r² − (r−1)² = 2r − 1), finished as the cosine against ``_qn2``.
+_RUN = "IF(s.p = d, s.r + 1, 1L)"
+_SCORE = (
+    "aggregate(array_sort(_dims), named_struct('p', -1, 'r', 0L, 'n', 0L, 'dot', 0L), "
+    f"(s, d) -> named_struct('p', d, 'r', {_RUN}, 'n', s.n + 2 * {_RUN} - 1, "
+    "'dot', s.dot + _q[d]), "
+    f"s -> {cosine_sql('s.dot', 's.n', '_qn2')})"
+)
 
 
 def _scored(cand: DataFrame, query: DataFrame, score: str = "score") -> DataFrame:
     """``cand`` rows whose body has tokens, each with the exact cosine
     of its tf vector against the one-row ``query`` frame.
 
-    ``dot = Σ_tokens q[dim]`` and ``n2 = Σ_dim tf²`` are exact BIGINT
-    folds over the row's own dims; doubles appear only in the final
-    ``cosine_from_fix``, the same division the DuckDB oracles run on
-    the same integers, so scores are bit-identical. A zero dot scores
-    0.0 in both: the oracles test the dot, ``cosine_from_fix`` the
-    norms, and a zero norm forces a zero dot."""
-    zero = F.lit(0).cast("long")
-    dims = F.col("_dims")
-    dot = F.aggregate(dims, zero, lambda a, d: a + F.col("_q")[d])
-
-    # over the sorted dims, the r-th token of a run adds r² − (r−1)² = 2r − 1
-    def run(s: Column, d: Column) -> Column:
-        return F.when(s["p"] == d, s["r"] + 1).otherwise(F.lit(1).cast("long"))
-
-    n2 = F.aggregate(
-        F.array_sort(dims),
-        F.struct(F.lit(-1).alias("p"), zero.alias("r"), zero.alias("n")),
-        lambda s, d: F.struct(
-            d.alias("p"), run(s, d).alias("r"), (s["n"] + 2 * run(s, d) - 1).alias("n")
-        ),
-        lambda s: s["n"],
-    )
+    ``dot`` and ``n2`` are exact BIGINT sums in one fold over the row's
+    own dims; doubles appear only in the fold's final cosine, the same
+    division the DuckDB oracles run on the same integers, so scores are
+    bit-identical. A zero dot scores 0.0 in both: the oracles test the
+    dot, the cosine the norms, and a zero norm forces a zero dot."""
     return (
         # filter on tokens, not _dims: the filter is pushed below the
         # projection, so a _dims predicate would hash every token twice
         cand.where(F.size(tokens(F.col("body"))) > 0)
-        .withColumn("_dims", _dims(F.col("body")))
+        .withColumn("_dims", F.expr(_dims("body")))
         .crossJoin(F.broadcast(query))
-        .select(*cand.columns, dot.alias("_dot"), n2.alias("_n2"), "_qn2")
-        .select(
-            *cand.columns,
-            cosine_from_fix(F.col("_dot"), F.col("_n2"), F.col("_qn2")).alias(score),
-        )
+        .select(*cand.columns, F.expr(_SCORE).alias(score))
     )
 
 
@@ -290,11 +283,12 @@ def _triage_core(
     nothing). The query is ONE global aggregate over the example rows'
     dims, broadcast to the candidates."""
     c = _canonical_per_hash(c)
-    coef = F.when(F.col("is_pos"), F.lit(2 * n_neg)).otherwise(F.lit(-n_pos)).cast("long")
+    coef = f"CAST(IF(is_pos, {2 * n_neg}, {-n_pos}) AS BIGINT)"
     examples = c.join(F.broadcast(marked), "rhythm_hash").agg(
-        F.flatten(F.collect_list(F.transform(
-            _dims(F.col("body")), lambda d: F.struct(d.alias("d"), coef.alias("c"))
-        ))).alias("_p")
+        F.expr(
+            f"flatten(collect_list(transform({_dims('body')}, "
+            f"d -> named_struct('d', d, 'c', {coef}))))"
+        ).alias("_p")
     )
     cand = c.join(F.broadcast(marked.select("rhythm_hash")), "rhythm_hash", "left_anti")
     return (

@@ -25,23 +25,28 @@ pinned (ts asc, event_id asc) tiebreak; ``event_date`` is derived by pure
 integer arithmetic (``ts // 86400`` days since epoch) so no session
 timezone can shift a partition.
 
-Scale posture (100 TB): the rollup is one hash-partitioned aggregation
-over the (already small) anomalous subset; the tier2 table is
-date-partitioned so retention is a partition drop and every forensic
-query prunes to the queried days; ``sample_logs`` caps payload width at
-5 rows/group so cluster rows stay O(1) regardless of incident size.
+Scale posture (100 TB): the rollup is part of the detection plan
+(``rhythm.anomaly_summary``): the window's per-hash count aggregate
+also takes ``max(ts)``, and its per-hash WindowGroupLimit keeps the
+first ``SAMPLE_LOGS_MAX`` rows (cut before the shuffle), so a cluster
+row is a projection of the detection row with no second pass over the
+window. :func:`daily_rollup`, the multi-day store build, runs the same
+``rhythm.group_summary`` keyed on (rhythm_hash, event_date). The tier2
+table is date-partitioned so retention is a partition drop and every
+forensic query prunes to the queried days; ``sample_logs`` caps payload
+width at 5 rows/group so cluster rows stay O(1) regardless of incident
+size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import rhythm
 from via_spark import store
 
-SAMPLE_LOGS_MAX = 5
 ENTITY_TYPE = "event_cluster"
 
 
@@ -73,16 +78,7 @@ def tier1_rows(flat: DataFrame) -> DataFrame:
     )
 
 
-def _serialize_log(df: DataFrame) -> Column:
-    """The engine's ``full_log_json`` analog for fixture rows (F9)."""
-    return F.to_json(
-        F.struct(
-            df["event_id"], df["ts"], df["service"], df["severity"], df["body"]
-        )
-    )
-
-
-#: tier2 store shape, as :func:`rollup_clusters` and :func:`daily_rollup`
+#: tier2 store shape, as :func:`detect_and_promote` and :func:`daily_rollup`
 #: write it through :func:`write_tier2` (``event_date`` is the partition
 #: column). Readers pass it so no parquet footer is read.
 TIER2_SCHEMA = (
@@ -93,57 +89,26 @@ TIER2_SCHEMA = (
 )
 
 
-def rollup_clusters(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
-    """A3: aggregate the logs of each anomalous hash into one cluster row.
-
-    ``anomalies``: output of ``rhythm.find_rhythm_anomalies`` (one row per
-    hash, representative fields + anomaly_type/context already attached —
-    same earliest-(ts, event_id) representative the rollup needs).
-    ``logs``: the rows to cluster (recent-window tier1 view).
-    """
-    member = logs.join(
-        anomalies.select("rhythm_hash"), "rhythm_hash", "left_semi"
-    )
-    agg = member.groupBy("rhythm_hash").agg(
-        F.min("ts").alias("start_ts"),
-        F.max("ts").alias("end_ts"),
-        F.count(F.lit(1)).alias("n_logs"),
-        F.transform(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("ts"),
-                            F.col("event_id"),
-                            _serialize_log(member).alias("log_json"),
-                        )
-                    )
-                ),
-                1,
-                SAMPLE_LOGS_MAX,
-            ),
-            lambda s: s["log_json"],
-        ).alias("sample_logs"),
-    )
-    return (
-        anomalies.select(
-            "rhythm_hash", "service", "severity", "body", "anomaly_type", "anomaly_context"
-        )
-        .join(agg, "rhythm_hash")
-        .select(
-            F.lit(ENTITY_TYPE).alias("entity_type"),
-            "rhythm_hash",
-            "start_ts",
-            "end_ts",
-            F.col("n_logs").alias("count"),
-            "service",
-            "severity",
-            "anomaly_type",
-            "anomaly_context",
-            "body",
-            "sample_logs",
-            event_date(F.col("start_ts")).alias("event_date"),
-        )
+def _clusters(summary: DataFrame) -> DataFrame:
+    """A3: the tier2 cluster row of each row of a ``rhythm.group_summary``
+    that carries ``anomaly_type``/``anomaly_context`` (an
+    ``anomaly_summary`` row, or one day of an anomalous hash) — a
+    projection: the summary already holds the count, last ts,
+    representative payload (the earliest-(ts, event_id) row, so its
+    ``ts`` is ``start_ts``) and ``sample_logs``."""
+    return summary.select(
+        F.lit(ENTITY_TYPE).alias("entity_type"),
+        "rhythm_hash",
+        F.col("ts").alias("start_ts"),
+        "end_ts",
+        F.col("r_count").alias("count"),
+        "service",
+        "severity",
+        "anomaly_type",
+        "anomaly_context",
+        "body",
+        "sample_logs",
+        event_date(F.col("ts")).alias("event_date"),
     )
 
 
@@ -151,11 +116,7 @@ def promotion_rollup(spark: SparkSession, sf_dir: str, **variant) -> DataFrame:
     """End-to-end: detect anomalies (sensitive variant → non-empty on the
     anomaly-free fixture) and roll their member logs into tier2 clusters."""
     params = variant or dict(sample_size=2000, novelty_min_count=1)
-    tier1 = store.tier1(spark, sf_dir)
-    now = rhythm.current_now(tier1)
-    anomalies = rhythm.find_rhythm_anomalies(spark, sf_dir, now=now, tier1=tier1, **params)
-    recent = rhythm.recent_window(tier1, now, rhythm.DEFAULT_WINDOW_SEC)
-    return rollup_clusters(anomalies, recent)
+    return _clusters(rhythm.anomaly_summary(spark, sf_dir, **params))
 
 
 def promotion_rollup_flat(spark: SparkSession, sf_dir: str, **variant) -> DataFrame:
@@ -193,64 +154,18 @@ def daily_rollup(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
     of the hash WITHIN each day; anomaly_type/context are per-hash
     detection metadata carried onto every day-row.
 
-    Scale posture: one hash-partitioned aggregation + one
-    WindowGroupLimit, both keyed on (rhythm_hash, event_date); written
+    Scale posture: ``rhythm.group_summary`` keyed on (rhythm_hash,
+    event_date) — one hash aggregation and one WindowGroupLimit; written
     through :func:`write_tier2` the result is the date-partitioned table
     every windowed forensic query prunes (S8).
     """
     member = logs.join(
         anomalies.select("rhythm_hash").distinct(), "rhythm_hash", "left_semi"
     ).withColumn("event_date", event_date(F.col("ts")))
-    w = Window.partitionBy("rhythm_hash", "event_date").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    rep = (
-        member.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("rhythm_hash", "event_date", "service", "severity", "body")
-    )
-    agg = member.groupBy("rhythm_hash", "event_date").agg(
-        F.min("ts").alias("start_ts"),
-        F.max("ts").alias("end_ts"),
-        F.count(F.lit(1)).alias("n_logs"),
-        F.transform(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("ts"),
-                            F.col("event_id"),
-                            _serialize_log(member).alias("log_json"),
-                        )
-                    )
-                ),
-                1,
-                SAMPLE_LOGS_MAX,
-            ),
-            lambda s: s["log_json"],
-        ).alias("sample_logs"),
-    )
-    return (
-        rep.join(agg, ["rhythm_hash", "event_date"])
-        .join(
-            anomalies.select(
-                "rhythm_hash", "anomaly_type", "anomaly_context"
-            ).distinct(),
+    return _clusters(
+        rhythm.group_summary(member, "rhythm_hash", "event_date").join(
+            anomalies.select("rhythm_hash", "anomaly_type", "anomaly_context").distinct(),
             "rhythm_hash",
-        )
-        .select(
-            F.lit(ENTITY_TYPE).alias("entity_type"),
-            "rhythm_hash",
-            "start_ts",
-            "end_ts",
-            F.col("n_logs").alias("count"),
-            "service",
-            "severity",
-            "anomaly_type",
-            "anomaly_context",
-            "body",
-            "sample_logs",
-            "event_date",
         )
     )
 
@@ -265,26 +180,28 @@ def detect_and_promote(
     **detect_kwargs,
 ) -> list[Row]:
     """T7 in one step: detect over ``tier1`` at ``now``, append the
-    anomalous hashes' recent-window rollup to tier2, return the anomaly
-    rows. Shared by the streaming trigger and the API verb.
+    anomalous hashes' clusters to tier2, return the anomaly rows
+    (:data:`rhythm.ANOMALY_COLUMNS`). Shared by the streaming trigger and
+    the API verb.
 
-    ``now is None`` (an empty store) is nothing to do. Otherwise the
-    detection plan runs ONCE: ``localCheckpoint`` keeps its few rows in
-    executor storage, the driver collects them from there, and the
-    rollup joins against the checkpoint instead of re-running detection.
-    No anomaly → no write, so tier2 never gets a ``_SUCCESS``-only
-    directory that :func:`read_tier2` cannot infer a schema from.
+    ``now is None`` (an empty store) is nothing to do. Otherwise one
+    plan runs ONCE: ``rhythm.anomaly_summary`` holds both the anomaly
+    rows and their clusters, ``localCheckpoint`` keeps its few rows in
+    executor storage, the driver collects the anomaly columns from
+    there, and the tier2 write is a projection of the checkpoint (no
+    second scan of the window). No anomaly → no write, so tier2 never
+    gets a ``_SUCCESS``-only directory that :func:`read_tier2` cannot
+    infer a schema from.
     """
     if now is None:
         return []
-    anomalies = rhythm.find_rhythm_anomalies(
+    summary = rhythm.anomaly_summary(
         spark, sf_dir="", tier1=tier1, now=now, window_sec=window_sec,
         rules=rules, **detect_kwargs,
     ).localCheckpoint()
-    rows = anomalies.collect()
+    rows = summary.select(*rhythm.ANOMALY_COLUMNS).collect()
     if rows:
-        recent = rhythm.recent_window(tier1, now, window_sec)
-        write_tier2(rollup_clusters(anomalies, recent), tier2_path)
+        write_tier2(_clusters(summary), tier2_path)
     return rows
 
 

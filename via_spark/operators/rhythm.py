@@ -21,12 +21,16 @@ Determinism: ``now`` is an explicit parameter (default: max ts in the
 table), never wall-clock — SURVEY.md §7.4 decision 2.
 
 Scale notes (100 TB posture):
-* Both scans are single predicate-pushed parquet reads over a
-  date-partitioned tier1; the baseline's newest-10k cap keeps the stats
-  side O(1) in history size.
+* Three predicate-pushed parquet reads over a date-partitioned tier1:
+  the window twice (per-hash counts; per-hash first rows, a
+  WindowGroupLimit cut before the shuffle) and the baseline once — its
+  newest-10k top-k runs once, for the per-hash counts and the global
+  bounds alike, and keeps the stats side O(1) in history size.
 * All joins key on ``rhythm_hash``; the stats side is <= 10k rows
   post-aggregation, so Spark broadcast-joins it (no shuffle of the
-  recent side beyond its own count aggregation).
+  recent side beyond its own aggregations).
+* One detection row carries its tier2 cluster too (``end_ts``,
+  ``sample_logs``), so promotion adds no pass over the window.
 """
 
 from __future__ import annotations
@@ -42,6 +46,13 @@ NOVELTY_MIN_COUNT = 2
 FREQUENCY_MIN_COUNT = 3
 FREQUENCY_STD_DEV_FACTOR = 2.5
 DEFAULT_WINDOW_SEC = 86_400  # one day of the fixture's 30-day stream
+SAMPLE_LOGS_MAX = 5  # tier2 ``sample_logs`` width (A3)
+
+#: the anomaly row: what ``find_rhythm_anomalies`` returns
+ANOMALY_COLUMNS = (
+    "rhythm_hash", "service", "severity", "body", "ts",
+    "anomaly_type", "anomaly_context", "r_count",
+)
 
 
 def _round1(col: Column) -> Column:
@@ -158,45 +169,80 @@ def baseline_sample(tier1: DataFrame, now: int, window_sec: int,
 def baseline_stats(baseline: DataFrame, window_sec: int) -> DataFrame:
     """A2: duration-normalized per-hash mean/std over the baseline sample.
 
-    Returns empty (no rows) when the sample has < 2 points, matching the
-    reference's early-return of ``{}``.
+    One pass over the sample: count/min/max per hash, then the global
+    bounds as a window over those (at most ``sample_size``) per-hash
+    rows, so the sample's top-k runs once. Returns empty (no rows) when
+    the sample has < 2 points, matching the reference's early-return of
+    ``{}``.
     """
-    bounds = baseline.agg(
-        F.max("ts").alias("newest_ts"),
+    per_hash = baseline.groupBy("rhythm_hash").agg(
+        F.count(F.lit(1)).alias("hist_count"),
         F.min("ts").alias("oldest_ts"),
-        F.count(F.lit(1)).alias("n_points"),
+        F.max("ts").alias("newest_ts"),
     )
-    scale = bounds.select(
-        (
-            F.lit(float(window_sec))
-            / F.greatest(F.lit(1).cast("long"), F.col("newest_ts") - F.col("oldest_ts"))
-        ).alias("scaling_factor"),
-        "n_points",
+    whole = Window.partitionBy()
+    scaling_factor = F.lit(float(window_sec)) / F.greatest(
+        F.lit(1).cast("long"),
+        F.max("newest_ts").over(whole) - F.min("oldest_ts").over(whole),
     )
-    counts = baseline.groupBy("rhythm_hash").agg(F.count(F.lit(1)).alias("hist_count"))
-    # scalar broadcast join (1 row) then the guard n_points >= 2
-    stats = (
-        counts.crossJoin(F.broadcast(scale))
+    return (
+        per_hash.select(
+            "rhythm_hash",
+            "hist_count",
+            scaling_factor.alias("scaling_factor"),
+            F.sum("hist_count").over(whole).alias("n_points"),
+        )
         .where(F.col("n_points") >= 2)
         .withColumn("mean", F.col("hist_count") * F.col("scaling_factor"))
         .withColumn("std_dev", F.greatest(F.lit(1.5), F.sqrt(F.col("mean"))))
         .select("rhythm_hash", "mean", "std_dev")
     )
-    return stats
 
 
-def representative_payloads(recent: DataFrame) -> DataFrame:
-    """J4: one representative row per rhythm_hash — earliest ts, then
-    smallest event_id (pinned deterministic tiebreak)."""
-    w = Window.partitionBy("rhythm_hash").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    return (
-        recent.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+def group_summary(rows: DataFrame, *keys: str) -> DataFrame:
+    """One row per ``keys`` group of ``rows``: ``r_count``, ``end_ts``,
+    the representative payload (J4: earliest ts, then smallest
+    event_id — the pinned deterministic tiebreak; its ``ts`` is the
+    group's first) and ``sample_logs``, the first
+    :data:`SAMPLE_LOGS_MAX` rows' JSON (the reference's ``full_log_json``,
+    F9) in that order.
+
+    The first rows per group are a WindowGroupLimit (cut before the
+    shuffle); the collect runs over the window's output, which is
+    already partitioned by ``keys``, so it adds no exchange."""
+    w = Window.partitionBy(*keys).orderBy(F.col("ts").asc(), F.col("event_id").asc())
+    firsts = (
+        rows.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= SAMPLE_LOGS_MAX)
+        .groupBy(*keys)
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        "ts", "event_id",
+                        F.to_json(
+                            F.struct("event_id", "ts", "service", "severity", "body")
+                        ).alias("log_json"),
+                        "service", "severity", "body",
+                    )
+                )
+            ).alias("_firsts")
+        )
+    )
+    counts = rows.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("r_count"), F.max("ts").alias("end_ts")
+    )
+    rep = F.col("_firsts")[0]
+    return counts.join(firsts, list(keys)).select(
+        *keys,
+        *[rep[c].alias(c) for c in ("service", "severity", "body", "ts")],
+        "r_count",
+        "end_ts",
+        F.col("_firsts")["log_json"].alias("sample_logs"),
     )
 
 
-def find_rhythm_anomalies(
+def anomaly_summary(
     spark: SparkSession,
     sf_dir: str,
     window_sec: int = DEFAULT_WINDOW_SEC,
@@ -210,9 +256,13 @@ def find_rhythm_anomalies(
 ) -> DataFrame:
     """Entry point 2 of the reference, as one declarative DataFrame plan.
 
-    Output: one row per anomalous rhythm_hash with the representative
-    payload, ``anomaly_type`` ('novelty' | 'frequency'), the reference's
-    human-readable ``anomaly_context`` string, and ``r_count``.
+    Output: one row per anomalous rhythm_hash with the
+    :data:`ANOMALY_COLUMNS` — the representative payload,
+    ``anomaly_type`` ('novelty' | 'frequency'), the reference's
+    human-readable ``anomaly_context`` string and ``r_count`` — plus
+    ``end_ts`` and ``sample_logs``, so the same row is also the hash's
+    tier2 cluster (``promote.detect_and_promote`` writes it as a
+    projection, with no second pass over the window).
 
     ``rules``: optional DataFrame with column ``rhythm_hash`` —
     suppressed/patched hashes are anti-joined away (J3/P5).
@@ -227,14 +277,8 @@ def find_rhythm_anomalies(
     if now is None:
         now = current_now(tier1)
 
-    recent = recent_window(tier1, now, window_sec)
     stats = baseline_stats(baseline_sample(tier1, now, window_sec, sample_size), window_sec)
-
-    counts = recent.groupBy("rhythm_hash").agg(F.count(F.lit(1)).alias("r_count"))
-    rep = representative_payloads(recent).select(
-        "rhythm_hash", "ts", "service", "severity", "body"
-    )
-    hashed = counts.join(rep, "rhythm_hash")
+    hashed = group_summary(recent_window(tier1, now, window_sec), "rhythm_hash")
     if rules is not None:
         hashed = hashed.join(
             F.broadcast(rules.select("rhythm_hash").distinct()), "rhythm_hash", "left_anti"
@@ -276,5 +320,13 @@ def find_rhythm_anomalies(
             F.when(is_novel, F.lit("novelty")).otherwise(F.lit("frequency")).alias("anomaly_type"),
             F.when(is_novel, novelty_ctx).otherwise(freq_ctx).alias("anomaly_context"),
             "r_count",
+            "end_ts",
+            "sample_logs",
         )
     )
+
+
+def find_rhythm_anomalies(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+    """The anomaly rows (:data:`ANOMALY_COLUMNS`) of
+    :func:`anomaly_summary`, which takes the same ``params``."""
+    return anomaly_summary(spark, sf_dir, **params).select(*ANOMALY_COLUMNS)

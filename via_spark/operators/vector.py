@@ -45,8 +45,11 @@ FIX6 = 1_000_000.0      # per-element scale for recommend's rational query vecto
 
 
 def _scored(e: DataFrame, query_id: int) -> DataFrame:
-    q = e.where(F.col("vec_id") == query_id).select(F.col("embedding").alias("q_emb"))
-    return with_cosine(e.crossJoin(F.broadcast(q)), "embedding", "q_emb")
+    q = e.where(F.col("vec_id") == query_id).select(
+        F.col("embedding").alias("q_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
+    )
+    return with_cosine(e.crossJoin(F.broadcast(q)), "embedding", "q_emb", nb="nb_fix")
 
 
 def knn_cosine_topk(
@@ -106,6 +109,7 @@ def ann_quantized_topk(
     q = e.where(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"),
         quantized_vec(F.col("embedding")).alias("q_qvec"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     cand = (
         e.where(F.col("vec_id") != query_id)
@@ -115,7 +119,7 @@ def ann_quantized_topk(
         .limit(oversample * k)
     )
     return (
-        with_cosine(cand, "embedding", "q_emb")
+        with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "qdot", "score")
@@ -205,7 +209,7 @@ def recommend_average_vector(
                 lambda acc, x: acc + x,
             ),
         )
-        .withColumn("score", cosine_from_fix(F.col("d_fix"), F.col("nq_fix"), F.col("nx_fix")))
+        .withColumn("score", cosine_from_fix("d_fix", "nq_fix", "nx_fix"))
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
         .select("vec_id", "label", "score")
@@ -273,12 +277,14 @@ def knn_batch_topk(
     """
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
     cand = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("query_id"))
     return (
-        with_cosine(cand, "embedding", "q_emb")
+        with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "vec_id", "label", "rank", "score")
@@ -394,9 +400,7 @@ def centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label_a",
             "label_b",
             "dot_fix",
-            cosine_from_fix(
-                F.col("dot_fix"), F.col("na_fix"), F.col("nb_fix")
-            ).alias("cos_sim"),
+            cosine_from_fix("dot_fix", "na_fix", "nb_fix").alias("cos_sim"),
         )
     )
 
@@ -456,9 +460,7 @@ def embedding_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "label",
-            cosine_from_fix(
-                F.col("dot_fix"), F.col("na_fix"), F.col("nb_fix")
-            ).alias("drift_cos"),
+            cosine_from_fix("dot_fix", "na_fix", "nb_fix").alias("drift_cos"),
         )
     )
 
@@ -480,13 +482,14 @@ def hard_negatives(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
         F.col("embedding").alias("q_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("vec_id").asc()
     )
     cand = e.crossJoin(F.broadcast(q)).where(F.col("label") != F.col("query_label"))
     return (
-        with_cosine(cand, "embedding", "q_emb")
+        with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "query_label", "vec_id", "label", "rank", "score")
@@ -528,11 +531,12 @@ def matryoshka_recall_report(
     )
 
     def _topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+        queries = queries.withColumn("nb_fix", dot_fix("q_emb", "q_emb"))
         cand = corpus.crossJoin(F.broadcast(queries)).where(
             F.col("vec_id") != F.col("query_id")
         )
         return (
-            with_cosine(cand, "embedding", "q_emb")
+            with_cosine(cand, "embedding", "q_emb", nb="nb_fix")
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= k)
             .select("query_id", "vec_id")
@@ -1370,13 +1374,14 @@ def semantic_contamination(
     bench = e.where(F.col("vec_id") < bench_max_id).select(
         F.col("vec_id").alias("bench_id"),
         F.col("embedding").alias("b_emb"),
+        dot_fix("embedding", "embedding").alias("nb_fix"),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cos").desc(), F.col("bench_id").asc()
     )
     cand = e.where(F.col("vec_id") >= bench_max_id).crossJoin(F.broadcast(bench))
     return (
-        with_cosine(cand, "embedding", "b_emb", out="cos")
+        with_cosine(cand, "embedding", "b_emb", out="cos", nb="nb_fix")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(

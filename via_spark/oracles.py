@@ -1536,7 +1536,7 @@ FROM documents
 # ---------------------------------------------------------------------------
 
 # hashing-trick embedding dimension of one token column {t}:
-# first 12 bits of sha256 mod 384 (mirrors functions.embed.token_dim)
+# first 12 bits of sha256 mod 384 (mirrors functions.embed.token_dim_sql)
 _HEXPOS = "strpos('0123456789abcdef', substr(sha256({t}), {i}, 1)) - 1"
 _DIM = (
     f"((({_HEXPOS.format(t='{t}', i=1)}) * 256"

@@ -6,16 +6,18 @@ Capability parity (semantics, not code) with the reference:
   a 0.5 s processing-time trigger (``INGEST_TRIGGER``).
 * T2 periodic analysis   — 60 s worker loop over the last 60 s
   (``app/worker.py:13-36``) → 60 s trigger ``foreachBatch`` that runs
-  the SAME batch detection plan (rhythm.find_rhythm_anomalies) against
-  the accumulated tier1 store; plus a genuine event-time tumbling-window
-  aggregation (``windowed_hash_counts``) the reference approximates with
-  wall-clock scans.
+  the SAME batch detection plan (rhythm.anomaly_summary, through
+  promote.detect_and_promote) against the accumulated tier1 store;
+  plus a genuine event-time tumbling-window aggregation
+  (``windowed_hash_counts``) the reference approximates with wall-clock
+  scans.
 * T4 watermark           — the reference has none (late events silently
   skew history); we add ``withWatermark(2 minutes)`` as a documented
   improvement.
 * T7 stream→batch promotion — anomalies detected in a trigger are
   rolled up (A3) and appended to the date-partitioned tier2 store
-  within the same ``foreachBatch``.
+  within the same ``foreachBatch``; the rollup is part of the detection
+  plan, so the write is a projection of its checkpoint.
 * T8 dual-sink tee       — one batch written to two sinks inside a
   single ``foreachBatch`` (the streamer's JSONL + API tee).
 
@@ -30,7 +32,8 @@ hashes. Detection is NOT independent of store size: each trigger scans
 all of tier1 once for ``now = max(ts)`` and once more for the baseline
 top-k (the newest ``sample_size`` rows before the window, 10k by
 default; a partition-local top-k with no global sort), and the window
-itself once for detection and once for the rollup. Swap the file
+twice, for its per-hash counts and its per-hash first rows (which are
+also the rollup's representative and sample logs). Swap the file
 source for Kafka by changing ``read_otel_stream`` only.
 """
 
@@ -229,12 +232,12 @@ def start_detection(
     3. ``now = max(ts)`` over all of tier1 — ``None`` (no rows) ends
        the trigger with nothing written;
     4. the rules table read, when ``rules_path`` exists;
-    5. the detection plan (window counts, baseline top-k over the
-       pre-window history, stats, joins), run once into a
-       ``localCheckpoint``, then its few rows collected from there;
-    6. only when there are anomalies: the rollup of the recent window
-       against the checkpointed anomalies and ONE tier2 append
-       (``promote.detect_and_promote``).
+    5. one plan for detection and the tier2 rollup (window counts and
+       per-hash first rows, baseline top-k over the pre-window history,
+       stats, joins), run once into a ``localCheckpoint``, then the
+       anomaly columns of its few rows collected from there;
+    6. only when there are anomalies: ONE tier2 append, a projection of
+       the checkpoint (``promote.detect_and_promote``).
     """
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
